@@ -4,12 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions.FloatDotProduct
-import graft.vcf.VcfFunctions
+import graft.vcf.{VcfFunctions, VcfPipeline}
 
 /** SQL-surface registration (§3.2 parity: the reference drives several
   * stages through HiveQL strings — our engine exposes the same operations
   * to `spark.sql` callers). Pure functions register as UDFs; the vector
-  * dot product registers as its native codegen expression.
+  * dot product and the cohort frequency register as their native / Column
+  * expressions.
   */
 object SqlFunctions {
 
@@ -21,17 +22,12 @@ object SqlFunctions {
     spark.udf.register("chrom_to_int", (s: String) => VcfFunctions.chromToInt(s))
     spark.udf.register("ad_alt_fraction",
       (ad: String, gt: String) => VcfFunctions.adAltFraction(ad, gt))
-    // U1: cohort allele frequency over collected per-sample maps
-    spark.udf.register("cohort_freq", (samples: Seq[Map[String, String]]) => {
-      if (samples == null || samples.isEmpty) 0.0f
-      else {
-        val alt = samples.iterator.map(_.getOrElse("gt", "") match {
-          case "1/1" => 2
-          case "0/1" => 1
-          case _     => 0
-        }).sum
-        (math.floor(alt.toDouble / (2 * samples.size) * 1e6) / 1e6).toFloat
-      }
+    // U1: cohort allele frequency over collected per-sample maps — the
+    // pipeline's own Column expression, so SQL and DataFrame callers agree
+    ColumnBridge.registerExpression(spark, "cohort_freq", exprs => {
+      require(exprs.length == 1, "cohort_freq(samples)")
+      ColumnBridge.expression(spark,
+        VcfPipeline.freqColumn(ColumnBridge.column(exprs(0))))
     })
     // U2: merge population maps, recoding empty values to "0"
     spark.udf.register("pop_normalize",

@@ -25,6 +25,16 @@ import org.apache.spark.sql.functions._
   */
 object IntervalJoin {
 
+  /** One row per `binWidth` bin that the closed span [lo, hi] touches:
+    * the bin keys every join here equi-joins on. Spans wider than
+    * `Guards.MaxBinsPerRow` bins raise, naming `site`.
+    */
+  private def binKeys(lo: Column, hi: Column, binWidth: Double, site: String): Column =
+    explode(Guards.boundedSequence(
+      floor(lo.cast("double") / binWidth).cast("long"),
+      floor(hi.cast("double") / binWidth).cast("long"),
+      Guards.MaxBinsPerRow, site))
+
   /** Join `points` to the `ranges` rows whose `[lo, hi)` (or `[lo, hi]` when
     * `hiInclusive`) interval contains `points(pointCol)`. Column names must
     * be disjoint between the two inputs (rename before calling).
@@ -47,10 +57,7 @@ object IntervalJoin {
     val p = points.withColumn(pBin, floor(col(pointCol) / binWidth).cast("long"))
     val r0 = ranges.withColumn(
       rBin,
-      explode(Guards.boundedSequence(
-        floor(col(loCol) / binWidth).cast("long"),
-        floor(col(hiCol) / binWidth).cast("long"),
-        Guards.MaxBinsPerRow, "pointInRange range bins")))
+      binKeys(col(loCol), col(hiCol), binWidth, "pointInRange range bins"))
     val r = if (broadcastRanges) broadcast(r0) else r0
 
     val residual: Column = {
@@ -103,14 +110,10 @@ object IntervalJoin {
       col(rStartCol).cast("long").as("rs"),
       col(rEndCol).cast("long").as("re"),
       col(rIdCol).cast("long").as("r_id"))
-    val qb = q.withColumn("b", explode(Guards.boundedSequence(
-      floor((col("qs") - maxDist).cast("double") / binWidth).cast("long"),
-      floor((col("qe") + maxDist).cast("double") / binWidth).cast("long"),
-      Guards.MaxBinsPerRow, "nearestWithin query bins")))
-    val rb = r.withColumn("b", explode(Guards.boundedSequence(
-      floor(col("rs").cast("double") / binWidth).cast("long"),
-      floor(col("re").cast("double") / binWidth).cast("long"),
-      Guards.MaxBinsPerRow, "nearestWithin ref bins")))
+    val qb = q.withColumn("b", binKeys(col("qs") - maxDist, col("qe") + maxDist,
+      binWidth.toDouble, "nearestWithin query bins"))
+    val rb = r.withColumn("b",
+      binKeys(col("rs"), col("re"), binWidth.toDouble, "nearestWithin ref bins"))
     qb.join(rb, Seq("chrom", "b"))
       .withColumn("dist", greatest(lit(0L),
         col("rs") - col("qe"), col("qs") - col("re")))
@@ -162,14 +165,10 @@ object IntervalJoin {
       col(bStartCol).cast("long").as("bs"),
       col(bEndCol).cast("long").as("be"),
       col(bIdCol).cast("long").as("b_id"))
-    val ab = qa.withColumn("bin", explode(Guards.boundedSequence(
-      floor(col("as_").cast("double") / binWidth).cast("long"),
-      floor(col("ae").cast("double") / binWidth).cast("long"),
-      Guards.MaxBinsPerRow, "reciprocalOverlap a bins")))
-    val bb = qb.withColumn("bin", explode(Guards.boundedSequence(
-      floor(col("bs").cast("double") / binWidth).cast("long"),
-      floor(col("be").cast("double") / binWidth).cast("long"),
-      Guards.MaxBinsPerRow, "reciprocalOverlap b bins")))
+    val ab = qa.withColumn("bin",
+      binKeys(col("as_"), col("ae"), binWidth.toDouble, "reciprocalOverlap a bins"))
+    val bb = qb.withColumn("bin",
+      binKeys(col("bs"), col("be"), binWidth.toDouble, "reciprocalOverlap b bins"))
     val ov = least(col("ae"), col("be")) -
       greatest(col("as_"), col("bs")) + 1
     // owner-bin attribution: a pair overlapping k shared bins would emit
@@ -333,14 +332,10 @@ object IntervalJoin {
     val bm = IntervalDepth.coalesce(b, bChrom, bStartCol, bEndCol)
       .select(col("chrom").as("b_chrom"), col("start").as("b_s"),
         col("stop").as("b_e"))
-    val qb = q.withColumn("bin", explode(Guards.boundedSequence(
-      floor(col("a_s").cast("double") / binWidth).cast("long"),
-      floor(col("a_e").cast("double") / binWidth).cast("long"),
-      Guards.MaxBinsPerRow, "subtract a bins")))
-    val rb = bm.withColumn("bin", explode(Guards.boundedSequence(
-      floor(col("b_s").cast("double") / binWidth).cast("long"),
-      floor(col("b_e").cast("double") / binWidth).cast("long"),
-      Guards.MaxBinsPerRow, "subtract b bins")))
+    val qb = q.withColumn("bin",
+      binKeys(col("a_s"), col("a_e"), binWidth.toDouble, "subtract a bins"))
+    val rb = bm.withColumn("bin",
+      binKeys(col("b_s"), col("b_e"), binWidth.toDouble, "subtract b bins"))
     val ov = qb.join(rb,
         qb("chrom") === rb("b_chrom") && qb("bin") === rb("bin") &&
           col("b_s") <= col("a_e") && col("b_e") >= col("a_s"),

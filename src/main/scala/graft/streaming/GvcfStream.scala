@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.vcf.{VcfParser, Variant}
+import graft.vcf.{VcfFunctions, VcfPipeline}
 
 /** Streaming gVCF ingest (reference S9, `StreamGenomicsLoader.scala`):
   * the DStream `textFileStream` + per-batch driver-side counting + the
@@ -15,29 +15,21 @@ import graft.vcf.{VcfParser, Variant}
   */
 object GvcfStream {
 
-  /** Parse a micro-batched text stream of gVCF lines into typed variants.
-    * Sample id is derived from the source filename; chromosome from its
-    * `.chrN.` segment (falls back to 0).
+  /** Parse a micro-batched text stream of gVCF lines into typed variants
+    * with the batch parser ([[VcfPipeline.parseText]]): sample id from the
+    * source file name, chromosome from its `.chrN.` segment (0 when there
+    * is none).
     */
-  def parse(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.readStream
-      .option("maxFilesPerTrigger", "100")
-      .text(dir)
-      .select(col("value"), input_file_name().as("file"))
-      .as[(String, String)]
-      .flatMap { case (line, file) =>
-        val name = file.split("/").last
-        val sampleId = name.split("\\.").head
-        val chrom = name.split("\\.").iterator
-          .find(_.startsWith("chr"))
-          .flatMap(s => scala.util.Try(
-            graft.vcf.VcfFunctions.chromToInt(s)).toOption)
-          .getOrElse(0)
-        VcfParser.parseLine(line, sampleId, chrom)
-      }
-      .toDF()
-  }
+  def parse(spark: SparkSession, dir: String): DataFrame =
+    VcfPipeline.parseText(
+      spark.readStream.option("maxFilesPerTrigger", "100").text(dir),
+      chromOf).toDF()
+
+  private def chromOf(fileName: String): Int =
+    fileName.split("\\.").iterator
+      .find(_.startsWith("chr"))
+      .flatMap(s => scala.util.Try(VcfFunctions.chromToInt(s)).toOption)
+      .getOrElse(0)
 
   /** Run the ingest: 60 s micro-batches (reference batch interval) into
     * band-partitioned parquet. Exactly-once: `foreachBatch` is
@@ -48,10 +40,12 @@ object GvcfStream {
     * discipline; a blind append silently duplicated the replayed batch).
     *
     * Layout contract: `outDir` must be fresh or already in the
-    * (chrom, band, batch) layout. An outDir written by the pre-batch-id
-    * (chrom, band) layout cannot be mixed in — parquet files would sit at
-    * two different partition depths and the reader would fail or
-    * mis-partition — so [[run]] refuses it loudly ([[assertLayout]]).
+    * (chrom, band, batch) layout, `band` being the band start position as
+    * in [[VcfPipeline.writePartitioned]]. An outDir written by the
+    * pre-batch-id (chrom, band) layout or with band indexes cannot be
+    * mixed in — parquet files would sit at two different partition depths,
+    * or one band under two names — so [[run]] refuses it loudly
+    * ([[assertLayout]]).
     */
   def run(spark: SparkSession, inDir: String, outDir: String,
       checkpoint: String,
@@ -63,7 +57,7 @@ object GvcfStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           batch
-            .withColumn("band", (col("pos") / 30000000L).cast("int"))
+            .withColumn("band", VcfPipeline.band(VcfPipeline.BandWidth))
             .withColumn("batch", lit(batchId))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -73,11 +67,14 @@ object GvcfStream {
       .start()
   }
 
-  /** Refuse an outDir carrying the legacy (chrom, band) layout — a
-    * `band=` directory holding data files directly instead of `batch=`
-    * subdirectories. One driver-side directory walk bounded by the
-    * partition tree (never lists data files beyond the first level of
-    * one band dir), so the guard costs nothing at scale.
+  /** Refuse an outDir this stream cannot extend: a `band=` value that is
+    * not a multiple of [[VcfPipeline.BandWidth]] (the older band-index
+    * layout, `band=1` for 30-60 Mbp, instead of the band start that
+    * [[VcfPipeline.writePartitioned]] also writes), or a `band=` directory
+    * holding data files directly instead of `batch=` subdirectories (the
+    * legacy (chrom, band) layout). One driver-side walk of the partition
+    * directories, listing data files under only the first band dir of each
+    * chrom, so the guard costs nothing at scale.
     */
   private[streaming] def assertLayout(spark: SparkSession, outDir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -87,9 +84,17 @@ object GvcfStream {
       val chromDirs = fs.listStatus(p)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("chrom="))
       chromDirs.foreach { c =>
-        fs.listStatus(c.getPath)
+        val bandDirs = fs.listStatus(c.getPath)
           .filter(s => s.isDirectory && s.getPath.getName.startsWith("band="))
-          .take(1) // one band probe per chrom is enough to classify
+        bandDirs.foreach { b =>
+          val start = b.getPath.getName.stripPrefix("band=").toLongOption
+          require(start.exists(_ % VcfPipeline.BandWidth == 0),
+            s"outDir $outDir holds ${b.getPath}, whose band is not a multiple " +
+              s"of ${VcfPipeline.BandWidth} (the older band-index layout); " +
+              "the stream writes band start positions — use a fresh outDir " +
+              "or migrate the data first")
+        }
+        bandDirs.take(1) // one band probe per chrom is enough to classify
           .foreach { b =>
             val legacy = fs.listStatus(b.getPath).exists(f =>
               f.isFile && f.getPath.getName.endsWith(".parquet"))

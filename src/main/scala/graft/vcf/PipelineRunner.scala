@@ -93,13 +93,10 @@ object PipelineRunner {
     if (c.stages.contains("effects"))
       VcfPipeline.effectGroups(parsed)
         .write.mode("overwrite").parquet(path(c, "effects"))
-    if (c.stages.contains("variants")) {
-      val samples = spark.read.parquet(path(c, "samples"))
-      val effects = spark.read.parquet(path(c, "effects"))
-      effects.join(samples, Seq("chrom", "pos", "ref", "alt"), "left")
-        .withColumn("freq", VcfPipeline.freqColumn(org.apache.spark.sql.functions.col("samples")))
+    if (c.stages.contains("variants"))
+      VcfPipeline.assemble(
+          spark.read.parquet(path(c, "effects")), spark.read.parquet(path(c, "samples")))
         .write.mode("overwrite").parquet(path(c, "variants"))
-    }
     if (c.stages.contains("publish"))
       DocumentSink.writeJson(
         spark.read.parquet(path(c, "variants")), path(c, "documents"))

@@ -31,9 +31,3 @@ case class Variant(
     indel: Boolean, sample: SampleCall,
     effects: Seq[FunctionalEffect],
     predictions: Predictions, populations: Populations)
-
-/** Raw gVCF body row (FIXTURES.md §1; reference `steps/gzToParquet.scala:14-23`). */
-case class RawVcfRow(
-    chrom: Int, pos: Int, id: String, ref: String, alt: String,
-    qual: String, filter: String, info: String, format: String,
-    sample: String, sampleId: String)

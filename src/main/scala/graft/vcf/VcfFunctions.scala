@@ -81,12 +81,11 @@ object VcfFunctions {
     if (total == 0.0) 0.0 else truncateAt(parts(idx) / total, 3)
   }
 
-  /** `<NON_REF>` coverage rows take END from INFO, else the point position
-    * (reference `steps/toSample.scala:61-66`).
+  /** `<NON_REF>` coverage rows take END from the [[infoToMap]] map, else
+    * the point position (reference `steps/toSample.scala:61-66`).
     */
-  def endPos(alt: String, info: String, pos: Int): Int =
-    if (alt.endsWith("<NON_REF>"))
-      infoToMap(info).get("END").map(_.toInt).getOrElse(pos)
+  def endPos(alt: String, info: Map[String, String], pos: Int): Int =
+    if (alt.endsWith("<NON_REF>")) info.get("END").map(_.toInt).getOrElse(pos)
     else pos
 
   /** Haploid genotype promotion: "0"→"0/0", "1"→"1/1", diploid flag false
@@ -130,12 +129,6 @@ object VcfFunctions {
       }
     }
   }
-
-  /** Extract the value list for `key=` from raw INFO text (reference
-    * `steps/Parser.scala:275-286`).
-    */
-  def infoValue(info: String, key: String): Option[String] =
-    infoToMap(info).get(key).filter(_.nonEmpty)
 
   /** dbSNP rs ids from the ID column (reference `steps/Parser.scala:287-298`). */
   def rsIds(id: String): Seq[String] =
@@ -239,12 +232,6 @@ object VcfFunctions {
     else maps.foldLeft(Map.empty[String, String]) { (acc, m) =>
       acc ++ m.map { case (k, v) => k -> (if (v == null || v.isEmpty) "0" else v) }
     }
-
-  /** Zero-padded sample-name generator (reference `nameCreator`,
-    * `GenomicsLoader.scala:220-230`).
-    */
-  def sampleName(prefix: String, idx: Int, width: Int = 4): String =
-    s"$prefix%0${width}d".format(idx)
 
   // ---- dbNSFP / ClinVar predictor rules ----------------------------------
 

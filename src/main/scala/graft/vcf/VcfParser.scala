@@ -10,23 +10,23 @@ import VcfFunctions._
   */
 object VcfParser {
 
-  /** Parse one tab-separated gVCF body line. Returns Nil for header /
-    * malformed lines.
+  /** Parse one tab-separated gVCF body line (columns as reference
+    * `steps/gzToParquet.scala:14-23`). Returns Nil for header / malformed
+    * lines. The INFO column is split into a map once per line and shared by
+    * END, ANN/EFF, predictions and populations.
     */
   def parseLine(line: String, sampleId: String, chrom: Int): Seq[Variant] = {
     if (line == null || line.isEmpty || line.startsWith("#")) return Nil
     val f = line.split("\t", -1)
     if (f.length < 10) return Nil
-    parseRaw(RawVcfRow(
-      chrom = chrom, pos = f(1).toInt, id = f(2), ref = f(3), alt = f(4),
-      qual = f(5), filter = f(6), info = f(7), format = f(8), sample = f(9),
-      sampleId = sampleId))
-  }
-
-  def parseRaw(r: RawVcfRow): Seq[Variant] = {
-    val (gtRaw, dp, gq, pl, adRaw) = formatFields(r.format, r.sample)
+    val pos = f(1).toInt
+    val id = f(2)
+    val ref = f(3)
+    val alt = f(4)
+    val info = infoToMap(f(7))
+    val (gtRaw, dp, gq, pl, adRaw) = formatFields(f(8), f(9))
     val (gtDip, diploid) = diploidize(gtRaw)
-    val end = endPos(r.alt, r.info, r.pos)
+    val end = endPos(alt, info, pos)
     // Sample.ad carries the alt-fraction string, not the raw AD list —
     // reference `ADsplit(ad, gt)` at `steps/Parser.scala:227-228`, indexed
     // by the genotype's alt digit ("" stays "" on coverage blocks).
@@ -34,39 +34,37 @@ object VcfParser {
 
     // Pure reference-coverage block: keep as an interval row (the input to
     // the J2 intersection), never multi-allele split.
-    if (r.alt == "<NON_REF>") {
+    if (alt == "<NON_REF>") {
       return Seq(Variant(
-        chrom = r.chrom, pos = r.pos, end_pos = end, ref = r.ref,
+        chrom = chrom, pos = pos, end_pos = end, ref = ref,
         alt = "<NON_REF>", indel = false,
         sample = SampleCall(gtDip, dp, gq, pl, ad, multiallelic = false,
-          sampleId = r.sampleId, diploid = diploid),
+          sampleId = sampleId, diploid = diploid),
         effects = Nil, predictions = emptyPredictions,
         populations = emptyPopulations))
     }
 
-    val splits = splitMultiallelic(r.alt, gtDip)
-
-    splits.map { s =>
-      val indel = r.ref.length != 1 || s.alt.length != 1
+    splitMultiallelic(alt, gtDip).map { s =>
+      val indel = ref.length != 1 || s.alt.length != 1
       val attachAnnotations = s.genoTypeNumber == 1 && !s.multiallelic
       // ANN preferred; legacy EFF= accepted when ANN is absent (the
       // reference handled both annotation generations)
+      def value(key: String) = info.get(key).filter(_.nonEmpty)
       val effects =
         if (attachAnnotations)
-          infoValue(r.info, "ANN") match {
+          value("ANN") match {
             case Some(ann) => parseAnn(ann, s.alt, s.genoTypeNumber)
-            case None => infoValue(r.info, "EFF")
-              .map(parseEff(_, s.genoTypeNumber)).getOrElse(Nil)
+            case None => value("EFF").map(parseEff(_, s.genoTypeNumber)).getOrElse(Nil)
           }
         else Nil
       val predictions =
-        if (attachAnnotations) parsePredictions(r.info, r.id) else emptyPredictions
+        if (attachAnnotations) parsePredictions(info, id) else emptyPredictions
       val populations =
-        if (attachAnnotations) parsePopulations(r.info) else emptyPopulations
+        if (attachAnnotations) parsePopulations(info) else emptyPopulations
       Variant(
-        chrom = r.chrom, pos = r.pos, end_pos = end, ref = r.ref, alt = s.alt,
+        chrom = chrom, pos = pos, end_pos = end, ref = ref, alt = s.alt,
         indel = indel,
-        sample = SampleCall(s.gt, dp, gq, pl, ad, s.multiallelic, r.sampleId, diploid),
+        sample = SampleCall(s.gt, dp, gq, pl, ad, s.multiallelic, sampleId, diploid),
         effects = effects, predictions = predictions, populations = populations)
     }
   }
@@ -76,13 +74,13 @@ object VcfParser {
   val emptyPopulations: Populations =
     Populations(0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
 
-  /** dbNSFP / ClinVar / CADD pulls with per-predictor rules: min SIFT
-    * score + D>T letter, max Polyphen + D>P>B, MutationTaster A>D>N,
-    * clinvar 5&4→9 (reference `Parser.scala:87-183`).
+  /** dbNSFP / ClinVar / CADD pulls from the parsed INFO map with
+    * per-predictor rules: min SIFT score + D>T letter, max Polyphen +
+    * D>P>B, MutationTaster A>D>N, clinvar 5&4→9 (reference
+    * `Parser.scala:87-183`).
     */
-  def parsePredictions(info: String, id: String): Predictions = {
-    val m = infoToMap(info)
-    def g(k: String) = m.getOrElse(k, "")
+  def parsePredictions(info: Map[String, String], id: String): Predictions = {
+    def g(k: String) = info.getOrElse(k, "")
     Predictions(
       sift_pred = predByPrecedence(g("dbNSFP_SIFT_pred"), Seq("D", "T")),
       sift_score = minScore(g("dbNSFP_SIFT_score"), 3),
@@ -100,12 +98,12 @@ object VcfParser {
       rs = rsIds(id).mkString(";"))
   }
 
-  /** Population allele frequencies, floor-truncated at 5 decimals
-    * (decimal-avoidance parity — SURVEY.md §1.3).
+  /** Population allele frequencies from the parsed INFO map,
+    * floor-truncated at 5 decimals (decimal-avoidance parity — SURVEY.md
+    * §1.3).
     */
-  def parsePopulations(info: String): Populations = {
-    val m = infoToMap(info)
-    def d(k: String) = removeDot(m.getOrElse(k, ""), 5)
+  def parsePopulations(info: Map[String, String]): Populations = {
+    def d(k: String) = removeDot(info.getOrElse(k, ""), 5)
     Populations(
       esp6500_aa = d("dbNSFP_ESP6500_AA_AF"),
       esp6500_ea = d("dbNSFP_ESP6500_EA_AF"),

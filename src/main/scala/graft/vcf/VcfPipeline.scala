@@ -5,41 +5,58 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.IntervalJoin
 
-/** The reference's batch DAG (SURVEY.md §3.1) rebuilt Spark-first:
+/** The reference's batch DAG (SURVEY.md §3.1) rebuilt Spark-first, one
+  * function per step:
   *
   * {{{
-  * gvcf text ── ingest ──▶ raw rows
-  * raw ── parse (typed flatMap) ── quality gates ──▶ parsedSamples
-  * parsedSamples ── <NON_REF> rows ──▶ coverage ranges
-  * distinct variant sites × ranges ── IntervalJoin bin rewrite ──▶ synthesized ref-calls
-  * parsed ∪ synthesized ── groupBy site ── collect_list(map(...)) ──▶ samples
-  * parsed ── explode effects ── groupBy site ── collect + first ──▶ effects
-  * effects ⟕ samples ── freq ──▶ variants (nested docs)
+  * step                                                       function
+  * gvcf text ── typed line parser ──▶ variants                parseText (ingest, GvcfStream.parse)
+  * variants ── quality gates ──▶ parsedSamples                qualityGate
+  * parsedSamples ── <NON_REF> rows ──▶ coverage ranges        coverageRanges
+  * variant sites × ranges ── IntervalJoin bin rewrite         intersect
+  *   ──▶ synthesized ref-calls                                synthesizedRefCalls
+  * calls ∪ synthesized ── groupBy site ──
+  *   collect_list(map(...)) ──▶ samples                       sampleGroups
+  * calls ── explode effects ── groupBy site ──
+  *   collect + first ──▶ effects                              effectGroups
+  * effects ⟕ samples ── freq ──▶ variants (nested docs)       assemble (freqColumn)
   * }}}
   *
   * Every stage is a DataFrame/Dataset plan (Catalyst-optimizable,
   * whole-stage codegen); the only typed lambda is the gVCF line parser
-  * itself. Stages write/read partitioned parquet by (chrom, band) when
-  * materialized — `partitionBy` replaces the reference's hand-built
-  * `chrom=C/band=B` paths (`steps/Parser.scala:199`).
+  * itself. The batch runner ([[PipelineRunner]]) and the streaming ingest
+  * (`graft.streaming.GvcfStream`) call these same functions; SQL callers
+  * reach the stages through `spark.sql` over a temp view of their output,
+  * which compiles to the same Catalyst plan. Stages write/read partitioned
+  * parquet by (chrom, band) when materialized — `partitionBy` replaces the
+  * reference's hand-built `chrom=C/band=B` paths
+  * (`steps/Parser.scala:199`).
   */
 object VcfPipeline {
 
   val GqMin = 19 // quality gates per reference (`steps/toRange.scala:33-34`)
   val DpMin = 7
 
-  /** S1/S2: read gVCF text (gzip handled by codec), drop headers, parse to
-    * typed variants. `input_file_name()` supplies the sample id (replacing
-    * the reference's filename/`toDebugString` hacks).
+  /** S1/S2: read gVCF text (gzip handled by codec) and parse it with
+    * [[parseText]] on one fixed chromosome.
     */
-  def ingest(spark: SparkSession, paths: Seq[String], chrom: Int): Dataset[Variant] = {
+  def ingest(spark: SparkSession, paths: Seq[String], chrom: Int): Dataset[Variant] =
+    parseText(spark.read.text(paths: _*), _ => chrom)
+
+  /** Text lines (`value`, batch or streaming) → typed variants. The sample
+    * id is the source file name up to its first `.`, via
+    * `input_file_name()` (replacing the reference's filename /
+    * `toDebugString` hacks); `chromOf` maps that file name to the
+    * chromosome code. Header and malformed lines drop out in the parser.
+    */
+  def parseText(text: DataFrame, chromOf: String => Int): Dataset[Variant] = {
+    val spark = text.sparkSession
     import spark.implicits._
-    spark.read.textFile(paths: _*)
-      .select(col("value"), input_file_name().as("file"))
+    text.select(col("value"), input_file_name().as("file"))
       .as[(String, String)]
       .flatMap { case (line, file) =>
-        val sampleId = file.split("/").last.split("\\.").head
-        VcfParser.parseLine(line, sampleId, chrom)
+        val name = file.split("/").last
+        VcfParser.parseLine(line, name.split("\\.").head, chromOf(name))
       }
   }
 
@@ -124,55 +141,6 @@ object VcfPipeline {
         lit("diploid"), col("diploid").cast("string"))).as("samples"))
   }
 
-  /** SQL-text twin of [[sampleGroups]] (§3.2 parity: the reference drives
-    * this stage as a HiveQL string over a registered temp table,
-    * `steps/toSampleGrouped.scala:39` — a user porting that SQL must be
-    * able to run it here). Registers the unioned call table as a temp
-    * view and groups with `collect_list(map(...))` in SQL. Same logical
-    * plan shape as the DataFrame form; `VcfSqlTwinSpec` asserts equal
-    * results.
-    */
-  /** Register under a unique name, analyze the SQL (eager in `spark.sql`),
-    * then drop the view: no fixed catalog name to clobber a caller's view
-    * or race a concurrent pipeline on the same session.
-    */
-  private def withTempView(df: DataFrame)(sql: String => String): DataFrame = {
-    val spark = df.sparkSession
-    val name = s"graft_v${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    df.createOrReplaceTempView(name)
-    try spark.sql(sql(name))
-    finally spark.catalog.dropTempView(name)
-  }
-
-  def sampleGroupsSql(parsed: DataFrame, binWidth: Double = 1e6): DataFrame =
-    withTempView(callColumns(parsed)
-        .unionByName(synthesizedRefCalls(parsed, binWidth))) { v =>
-      s"""SELECT chrom, pos, ref, alt, indel,
-         |  collect_list(map(
-         |    'sample', sampleId, 'gt', gt,
-         |    'dp', CAST(dp AS STRING), 'gq', CAST(gq AS STRING),
-         |    'ad', ad, 'multi', CAST(multiallelic AS STRING),
-         |    'diploid', CAST(diploid AS STRING))) AS samples
-         |FROM $v
-         |GROUP BY chrom, pos, ref, alt, indel""".stripMargin
-    }
-
-  /** SQL-text twin of [[effectGroups]] (reference
-    * `steps/toEffectsGrouped.scala:24-38`): LATERAL VIEW OUTER explode +
-    * collect_list/first over a temp view.
-    */
-  def effectGroupsSql(parsed: DataFrame): DataFrame =
-    withTempView(parsed) { v =>
-      s"""SELECT chrom, pos, ref, alt,
-         |  array_distinct(collect_list(effect)) AS effects,
-         |  first(predictions) AS predictions,
-         |  first(populations) AS populations
-         |FROM $v
-         |  LATERAL VIEW OUTER explode(effects) fx AS effect
-         |WHERE alt != '<NON_REF>'
-         |GROUP BY chrom, pos, ref, alt""".stripMargin
-    }
-
   /** A2/A3: per-site effect array (exploded, deduped) + first-seen
     * predictions/populations.
     */
@@ -191,7 +159,9 @@ object VcfPipeline {
   /** U1: cohort allele frequency over the collected sample maps — sum of
     * alt-allele digits / (2 × samples), floor-truncated to float like the
     * reference's `freq` UDF (`steps/toVariant.scala:28-30`). Higher-order
-    * functions, no UDF.
+    * functions, no UDF; SQL reaches the same expression as `cohort_freq`
+    * (`graft.SqlFunctions`). A null or empty sample list has no frequency:
+    * null.
     */
   def freqColumn(samples: Column): Column = {
     val altCount = aggregate(samples, lit(0),
@@ -199,24 +169,35 @@ object VcfPipeline {
         when(element_at(s, "gt") === "1/1", 2)
           .when(element_at(s, "gt") === "0/1", 1)
           .otherwise(0))
-    (floor(altCount.cast("double") / (size(samples) * 2) * 1e6) / 1e6).cast("float")
+    when(size(samples) > 0,
+      (floor(altCount.cast("double") / (size(samples) * 2) * 1e6) / 1e6).cast("float"))
   }
 
-  /** J3 + U1: final nested per-variant document. */
-  def variants(parsed: DataFrame, binWidth: Double = 1e6): DataFrame = {
-    val samples = sampleGroups(parsed, binWidth)
-    val effects = effectGroups(parsed)
+  /** J3 + U1: per-site effects ⟕ per-site samples, plus the cohort
+    * frequency — the final nested per-variant document.
+    */
+  def assemble(effects: DataFrame, samples: DataFrame): DataFrame =
     effects.join(samples, Seq("chrom", "pos", "ref", "alt"), "left")
       .withColumn("freq", freqColumn(col("samples")))
-  }
+
+  /** The whole grouping half of the DAG over parsed rows in one plan. */
+  def variants(parsed: DataFrame, binWidth: Double = 1e6): DataFrame =
+    assemble(effectGroups(parsed), sampleGroups(parsed, binWidth))
+
+  /** Width of the genomic band that partitions stored variants. */
+  val BandWidth = 30000000L
+
+  /** The `band` partition value: the start position of the row's band. */
+  def band(bandWidth: Long): Column =
+    (col("pos") / bandWidth).cast("int") * bandWidth.toInt
 
   /** S4: partitioned parquet sink — genomic band as a first-class derived
     * column, `partitionBy` instead of hand-built paths (U5: the custom
     * `BinPartitioner` becomes `repartitionByRange` on the derived key, so
     * rows land clustered and each partition directory gets few files).
     */
-  def writePartitioned(df: DataFrame, dest: String, bandWidth: Long = 30000000L): Unit =
-    df.withColumn("band", (col("pos") / bandWidth).cast("int") * bandWidth.toInt)
+  def writePartitioned(df: DataFrame, dest: String, bandWidth: Long = BandWidth): Unit =
+    df.withColumn("band", band(bandWidth))
       .repartitionByRange(col("chrom"), col("band"), col("pos"))
       .write.mode("overwrite").partitionBy("chrom", "band").parquet(dest)
 }

@@ -15,6 +15,14 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A composite `Column` (functions, lambdas) fully converted to its
+    * catalyst tree by `spark`'s own converter — what a SQL function
+    * builder must return; [[expression]] only unwraps a column built from
+    * one expression.
+    */
+  def expression(spark: org.apache.spark.sql.SparkSession, c: Column): Expression =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
+
   /** Register a native expression under `name` for the SQL surface
     * (`SELECT name(...)`) of this session.
     */

@@ -29,6 +29,23 @@ class SqlFunctionsSpec extends AnyFunSuite {
     assert(r.getAs[Float]("f") == 0.25f)
   }
 
+  test("cohort_freq and freqColumn: null for null and empty sample lists") {
+    import org.apache.spark.sql.functions.col
+    val lists = spark.sql(
+      """SELECT * FROM VALUES
+        |  (1, array(map('gt','1/1'), map('gt','0/1'))),
+        |  (2, CAST(array() AS ARRAY<MAP<STRING, STRING>>)),
+        |  (3, CAST(NULL AS ARRAY<MAP<STRING, STRING>>)) AS t(id, samples)""".stripMargin)
+    def byId(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getInt(0) -> Option(r.get(1)).map(_.asInstanceOf[Float])).toMap
+    val expected = Map(1 -> Some(0.75f), 2 -> None, 3 -> None)
+    assert(byId(lists.select(col("id"),
+      graft.vcf.VcfPipeline.freqColumn(col("samples")))) == expected)
+    lists.createOrReplaceTempView("cohort_freq_lists")
+    assert(byId(spark.sql(
+      "SELECT id, cohort_freq(samples) FROM cohort_freq_lists")) == expected)
+  }
+
   test("fvec_dot native expression callable from SQL") {
     val r = spark.sql(
       """SELECT fvec_dot(array(cast(1.0 as float), cast(2.0 as float)),

@@ -70,10 +70,10 @@ class VcfFunctionsSpec extends AnyFunSuite {
   }
 
   test("endPos takes END only for <NON_REF> rows") {
-    assert(endPos("<NON_REF>", "DP=3;END=500", 100) == 500)
-    assert(endPos("A,<NON_REF>", "END=500", 100) == 500)
-    assert(endPos("A", "END=500", 100) == 100)
-    assert(endPos("<NON_REF>", "DP=3", 100) == 100)
+    assert(endPos("<NON_REF>", infoToMap("DP=3;END=500"), 100) == 500)
+    assert(endPos("A,<NON_REF>", infoToMap("END=500"), 100) == 500)
+    assert(endPos("A", infoToMap("END=500"), 100) == 100)
+    assert(endPos("<NON_REF>", infoToMap("DP=3"), 100) == 100)
   }
 
   test("diploidize promotes haploid calls") {
@@ -206,11 +206,6 @@ class VcfFunctionsSpec extends AnyFunSuite {
       Map("af" -> "", "ac" -> "5"), Map("an" -> "", "af" -> "0.1")))
     assert(out == Map("af" -> "0.1", "ac" -> "5", "an" -> "0"))
     assert(popNormalize(null) == Map.empty)
-  }
-
-  test("sampleName zero-pads") {
-    assert(sampleName("S", 7) == "S0007")
-    assert(sampleName("Sample", 123, 6) == "Sample000123")
   }
 
   test("umdLabel: reference exact-string mapping, U for unknown") {

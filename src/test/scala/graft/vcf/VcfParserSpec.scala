@@ -63,6 +63,13 @@ class VcfParserSpec extends AnyFunSuite {
     assert(out.length == 1)
     assert(out.head.effects.map(_.transcript_id) == Seq("TR9"))
     assert(out.head.effects.head.gene_name == "GENE9")
+    // both present: ANN wins and EFF is ignored
+    val both = line.replace("DP=22;",
+      "DP=22;ANN=G|stop_gained|HIGH|GENE7|ENSG7|transcript|TR7|protein_coding|1/2|c.1A>G|p.K1*|1|1|1|x;")
+    val fromAnn = VcfParser.parseLine(both, "S5", 5)
+    assert(fromAnn.length == 1)
+    assert(fromAnn.head.effects.map(_.transcript_id) == Seq("TR7"))
+    assert(fromAnn.head.effects.head.gene_name == "GENE7")
   }
 
   test("header and malformed lines yield nothing") {

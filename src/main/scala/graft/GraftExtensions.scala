@@ -24,110 +24,95 @@ import graft.operators.Similarity
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("fvec_dot"),
-      new ExpressionInfo(classOf[FloatDotProduct].getName, "fvec_dot"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "fvec_dot(arrayFloat, arrayFloat)")
-        FloatDotProduct(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sign_band_keys"),
-      new ExpressionInfo(classOf[SignBandKeys].getName, "sign_band_keys"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 5,
-          "sign_band_keys(vec, bands, planesPerBand, dim, seed)")
-        def intArg(e: Expression, what: String): Int = {
-          require(e.foldable, s"$what must be a literal")
-          e.eval(null) match {
-            case i: Int  => i
-            case l: Long => require(l.isValidInt, s"$what out of range: $l"); l.toInt
-            case other   => throw new IllegalArgumentException(
-              s"$what must be an integer literal, got $other")
-          }
-        }
-        val bands = intArg(exprs(1), "bands")
-        val r = intArg(exprs(2), "planesPerBand")
-        val dim = intArg(exprs(3), "dim")
-        require(bands >= 1 && dim >= 1, "bands and dim must be >= 1")
-        require(r >= 1 && r <= 64, "planesPerBand must be in [1, 64] (long key bits)")
-        require(exprs(4).foldable, "seed must be a literal")
-        val seed = exprs(4).eval(null) match {
-          case i: Int  => i.toLong
-          case l: Long => l
-          case other   => throw new IllegalArgumentException(
-            s"seed must be an integer literal, got $other")
-        }
-        SignBandKeys(exprs(0), Similarity.flatPlanes(bands, r, dim, seed),
-          bands, r, dim)
-      }))
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.nativeFunctions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
+}
+
+object GraftExtensions {
+
+  private def intLit(e: Expression, what: String): Int = {
+    require(e.foldable, s"$what must be a literal")
+    e.eval(null) match {
+      case i: Int  => i
+      case l: Long => require(l.isValidInt, s"$what out of range: $l"); l.toInt
+      case other   => throw new IllegalArgumentException(
+        s"$what must be an integer literal, got $other")
+    }
+  }
+
+  private def boolLit(e: Expression, what: String): Boolean = {
+    require(e.foldable, s"$what must be a literal")
+    e.eval(null) match {
+      case b: Boolean => b
+      case other => throw new IllegalArgumentException(
+        s"$what must be a boolean literal, got $other")
+    }
+  }
+
+  /** (SQL name, expression class, builder) of every native function —
+    * injected by the extension and registered per session by
+    * `SqlFunctions.register`, so both deployment modes resolve the same
+    * names with the same argument checks.
+    */
+  val nativeFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("fvec_dot", classOf[FloatDotProduct], exprs => {
+      require(exprs.length == 2, "fvec_dot(arrayFloat, arrayFloat)")
+      FloatDotProduct(exprs(0), exprs(1))
+    }),
+    ("sign_band_keys", classOf[SignBandKeys], exprs => {
+      require(exprs.length == 5,
+        "sign_band_keys(vec, bands, planesPerBand, dim, seed)")
+      val bands = intLit(exprs(1), "bands")
+      val r = intLit(exprs(2), "planesPerBand")
+      val dim = intLit(exprs(3), "dim")
+      require(bands >= 1 && dim >= 1, "bands and dim must be >= 1")
+      require(r >= 1 && r <= 64, "planesPerBand must be in [1, 64] (long key bits)")
+      require(exprs(4).foldable, "seed must be a literal")
+      val seed = exprs(4).eval(null) match {
+        case i: Int  => i.toLong
+        case l: Long => l
+        case other   => throw new IllegalArgumentException(
+          s"seed must be an integer literal, got $other")
+      }
+      SignBandKeys(exprs(0), Similarity.flatPlanes(bands, r, dim, seed),
+        bands, r, dim)
+    }),
     // The per-document sketch kernels (r7): SQL users get the same
     // zero-shuffle shingle/SimHash/repetition sketches the Scala
     // operators compute — e.g. the whole d1/d4-style dedup signature
     // pass is a SELECT.
-    def boolArg(e: Expression, what: String): Boolean = {
-      require(e.foldable, s"$what must be a literal")
-      e.eval(null) match {
-        case b: Boolean => b
-        case other => throw new IllegalArgumentException(
-          s"$what must be a boolean literal, got $other")
-      }
-    }
-    def intLit(e: Expression, what: String): Int = {
-      require(e.foldable, s"$what must be a literal")
-      e.eval(null) match {
-        case i: Int  => i
-        case l: Long => require(l.isValidInt, s"$what out of range: $l"); l.toInt
-        case other   => throw new IllegalArgumentException(
-          s"$what must be an integer literal, got $other")
-      }
-    }
-    ext.injectFunction((
-      FunctionIdentifier("shingle_keys"),
-      new ExpressionInfo(classOf[ShingleKeysExpr].getName, "shingle_keys"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2 || exprs.length == 3,
-          "shingle_keys(tokensArray, n[, portable])")
-        val n = intLit(exprs(1), "n")
-        require(n >= 1, "n must be >= 1")
-        ShingleKeysExpr(exprs(0), n,
-          if (exprs.length == 3) boolArg(exprs(2), "portable") else false)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "simhash64"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1 || exprs.length == 2,
-          "simhash64(tokensArray[, portable])")
-        SimHash64Expr(exprs(0),
-          if (exprs.length == 2) boolArg(exprs(1), "portable") else false)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("gram_repetition"),
-      new ExpressionInfo(classOf[GramRepetitionExpr].getName, "gram_repetition"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "gram_repetition(tokensArray)")
-        GramRepetitionExpr(exprs(0))
-      }))
+    ("shingle_keys", classOf[ShingleKeysExpr], exprs => {
+      require(exprs.length == 2 || exprs.length == 3,
+        "shingle_keys(tokensArray, n[, portable])")
+      val n = intLit(exprs(1), "n")
+      require(n >= 1, "n must be >= 1")
+      ShingleKeysExpr(exprs(0), n,
+        if (exprs.length == 3) boolLit(exprs(2), "portable") else false)
+    }),
+    ("simhash64", classOf[SimHash64Expr], exprs => {
+      require(exprs.length == 1 || exprs.length == 2,
+        "simhash64(tokensArray[, portable])")
+      SimHash64Expr(exprs(0),
+        if (exprs.length == 2) boolLit(exprs(1), "portable") else false)
+    }),
+    ("gram_repetition", classOf[GramRepetitionExpr], exprs => {
+      require(exprs.length == 1, "gram_repetition(tokensArray)")
+      GramRepetitionExpr(exprs(0))
+    }),
     // Spark ships Bloom-filter build/probe expressions for its runtime
     // join filters but does not register them as SQL functions; surface
     // them so SQL callers can run the Bloom-prefilter decontamination
     // shape (Decontamination.bloomDecontaminate) end to end in SQL.
-    ext.injectFunction((
-      FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "bloom_filter_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3,
-          "bloom_filter_agg(hashLong, estimatedItems, numBits)")
-        new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "might_contain"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "might_contain(bloomFilterBinary, hashLong)")
-        BloomFilterMightContain(exprs(0), exprs(1))
-      }))
-  }
+    ("bloom_filter_agg", classOf[BloomFilterAggregate], exprs => {
+      require(exprs.length == 3,
+        "bloom_filter_agg(hashLong, estimatedItems, numBits)")
+      new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
+    }),
+    ("might_contain", classOf[BloomFilterMightContain], exprs => {
+      require(exprs.length == 2, "might_contain(bloomFilterBinary, hashLong)")
+      BloomFilterMightContain(exprs(0), exprs(1))
+    }))
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Coverage-depth histogram over an interval table — the genomics
   * `genomecov` question ("how many bases are covered at depth d?") the
@@ -27,9 +28,9 @@ import org.apache.spark.sql.functions._
   * model-sized, the offset vector of an external scan), and a
   * per-partition streaming pass that adds the carried offset. Segment
   * ends come from the partition-local next row, or — only for the last
-  * row of a partition mid-chromosome — from the next non-empty
-  * partition's first position, known on the driver from the same
-  * collect. Every step is exact integer arithmetic; output is
+  * row of a partition mid-chromosome — from that chromosome's first
+  * position in the next partition holding it, known on the driver from
+  * the same collect. Every step is exact integer arithmetic; output is
   * engine-bit-identical.
   *
   * The sweep invariant makes chrom boundaries safe with no special
@@ -43,138 +44,168 @@ import org.apache.spark.sql.functions._
   */
 object IntervalDepth {
 
-  /** Shared sweep preamble: validated (chrom, s, e) intervals become
-    * per-(chrom, pos) delta rows with the close event at
-    * `stop + closeShift`, range-partitioned and sorted on (chrom, pos),
-    * plus the model-sized driver state a partition-local pass needs:
-    * carry-in depth per (pid, chrom) and the first (chrom, pos) of the
-    * next non-empty partition.
+  /** One interval track of a sweep: the columns of `df` holding the
+    * chrom, start and (closed) end of each interval.
     */
-  private def sweepRuns(
-      intervals: DataFrame, chromCol: String, startCol: String,
-      endCol: String, closeShift: Long, numPartitions: Int, op: String)
-      : (Dataset[(Int, String, Long, Long)],
-         Map[(Int, String), Long], Map[Int, (String, Long)]) = {
-    val spark = intervals.sparkSession
-    import spark.implicits._
+  private[operators] final case class Track(
+      df: DataFrame, chrom: String, start: String, end: String)
+
+  /** `(chrom, start, end)` cast to string/long/long, raising — named by
+    * `op` — on a null chrom or an interval with end < start. A null chrom
+    * would collide with the sweep's "new chrom" sentinel (silently
+    * skipping the carried offset) or drop out of a bin join; a silently
+    * dropped inverted interval would undercount with no signal.
+    */
+  private[operators] def checkedSpan(chromCol: String, startCol: String,
+      endCol: String, op: String): (Column, Column, Column) = {
+    val (s, e) = (col(startCol).cast("long"), col(endCol).cast("long"))
+    (when(col(chromCol).isNull, raise_error(lit(s"$op: null chrom")))
+       .otherwise(col(chromCol).cast("string")),
+     s,
+     when(e < s, raise_error(concat(lit(s"$op: interval with end < "
+         + "start at chrom "), col(chromCol).cast("string"))))
+       .otherwise(e))
+  }
+
+  /** A range-partitioned event run and the model-sized driver state a
+    * partition-local pass needs. `run` rows are (pid, chrom, pos, d0 ..
+    * d<k-1>), one delta column per track, sorted on (chrom, pos) within
+    * each partition. `carry((pid, chrom))` holds each track's depth
+    * entering partition `pid` on `chrom`; `nextPos((pid, chrom))` is the
+    * first event of `chrom` in the next partition that holds `chrom`,
+    * absent where `chrom` ends inside `pid`.
+    */
+  private final case class Sweep(run: DataFrame,
+      carry: Map[(Int, String), Array[Long]],
+      nextPos: Map[(Int, String), Long])
+
+  /** The shared sweep preamble: each track's validated intervals become
+    * (+1 at start, −1 at stop + `closeShift`) events in that track's
+    * delta column, collapsed to one row per (chrom, pos), range-
+    * partitioned and sorted on (chrom, pos), plus the carry state of
+    * [[Sweep]].
+    */
+  private def sweepRuns(tracks: Seq[Track], closeShift: Long,
+      numPartitions: Int, op: String): Sweep = {
+    val spark = tracks.head.df.sparkSession
     val parts =
       if (numPartitions > 0) numPartitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val iv = intervals.select(
-      // fail loudly on a null chrom — the streaming carry pass keys its
-      // per-partition offsets on the chrom value, and its "new chrom"
-      // sentinel is null, so a genuine null key would silently skip the
-      // carried offset instead of crashing
-      when(col(chromCol).isNull,
-        raise_error(lit(s"$op: null chrom")))
-        .otherwise(col(chromCol).cast("string")).as("chrom"),
-      col(startCol).cast("long").as("s"),
-      // fail loudly on an inverted interval — a silent drop would
-      // undercount depth with no signal
-      when(col(endCol).cast("long") < col(startCol).cast("long"),
-        raise_error(concat(lit(s"$op: interval with end < "
-          + "start at chrom "), col(chromCol).cast("string"))))
-        .otherwise(col(endCol).cast("long")).as("e"))
-    val ev = iv.select(col("chrom"), col("s").as("pos"), lit(1L).as("d"))
-      .unionAll(iv.select(col("chrom"), (col("e") + closeShift).as("pos"),
-        lit(-1L).as("d")))
+    val ds = tracks.indices.map(k => s"d$k")
+    val ev = tracks.zipWithIndex.flatMap { case (t, k) =>
+      val (chrom, s, e) = checkedSpan(t.chrom, t.start, t.end, op)
+      val iv = t.df.select(chrom.as("chrom"), s.as("s"), e.as("e"))
+      def deltas(v: Long) =
+        ds.indices.map(j => lit(if (j == k) v else 0L).as(ds(j)))
+      Seq(iv.select(col("chrom") +: col("s").as("pos") +: deltas(1L): _*),
+        iv.select(col("chrom") +: (col("e") + closeShift).as("pos") +:
+          deltas(-1L): _*))
+    }.reduce(_ unionAll _)
     // one delta row per event position — map-side partials collapse
     // duplicate positions before the exchange
-    val agg = ev.groupBy("chrom", "pos").agg(sum("d").as("delta"))
-    val run = agg
+    val sums = ds.map(d => sum(d).as(d))
+    val run = ev.groupBy("chrom", "pos").agg(sums.head, sums.tail: _*)
       .repartitionByRange(parts, col("chrom"), col("pos"))
       .sortWithinPartitions("chrom", "pos")
-      .select(spark_partition_id().as("pid"), col("chrom"), col("pos"),
-        col("delta"))
-      .as[(Int, String, Long, Long)]
+      .select(spark_partition_id().as("pid") +: col("chrom") +: col("pos") +:
+        ds.map(col): _*)
       .localCheckpoint()
-    // per-(partition, chrom) subtotals and first event per partition:
-    // <= partitions + chroms rows — the model-sized driver traffic of
-    // an external scan's offset vector. KEY-CARDINALITY CONTRACT: this
-    // collect is bounded because the carry key is a CHROMOSOME —
-    // genomes have tens of contigs (a few thousand with scaffolds),
-    // so partitions × chroms stays offset-vector-sized at any corpus
-    // scale. Reusing this sweep for a NON-genomic track key (e.g.
-    // per-document or per-user intervals, millions of keys) would make
-    // the driver map key-cardinality-sized — don't: re-key such data
-    // onto a bounded partition key first, or use the bin-join
-    // operators (IntervalJoin) whose state never leaves the executors.
+    // per-(partition, chrom) subtotals and first position: <= partitions
+    // + chroms rows — the model-sized driver traffic of an external
+    // scan's offset vector. KEY-CARDINALITY CONTRACT: this collect is
+    // bounded because the carry key is a CHROMOSOME — genomes have tens
+    // of contigs (a few thousand with scaffolds), so partitions × chroms
+    // stays offset-vector-sized at any corpus scale. Reusing this sweep
+    // for a NON-genomic track key (e.g. per-document or per-user
+    // intervals, millions of keys) would make the driver maps
+    // key-cardinality-sized — don't: re-key such data onto a bounded
+    // partition key first, or use the bin-join operators (IntervalJoin)
+    // whose state never leaves the executors.
     val partials = run.groupBy("pid", "chrom")
-      .agg(sum("delta").as("sd"), min("pos").as("firstPos"))
-      .as[(Int, String, Long, Long)].collect().sortBy(r => (r._2, r._1))
-    // carry-in per (pid, chrom): sum of the same chrom's deltas in all
-    // earlier partitions (range partitioning makes "earlier" = smaller
-    // pid)
-    val offsets: Map[(Int, String), Long] = {
-      val m = scala.collection.mutable.Map.empty[(Int, String), Long]
-      partials.groupBy(_._2).foreach { case (chrom, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1).foreach { case (pid, _, sd, _) =>
-          m((pid, chrom)) = acc; acc += sd
+      .agg(min("pos").as("firstPos"), sums: _*).collect()
+    val carry = scala.collection.mutable.Map.empty[(Int, String), Array[Long]]
+    val nextPos = scala.collection.mutable.Map.empty[(Int, String), Long]
+    // Range partitioning puts a chrom's events in consecutive non-empty
+    // partitions, so the carry-in is the sum over the chrom's smaller
+    // pids, and a partition ending mid-chrom continues at the chrom's
+    // first position in the next pid that holds it. Keyed by chrom, this
+    // never compares chroms on the driver, where JVM (UTF-16) string
+    // order differs from Spark's UTF-8 byte order past the BMP.
+    partials.groupBy(_.getString(1)).foreach { case (chrom, rows) =>
+      val byPid = rows.sortBy(_.getInt(0))
+      val acc = new Array[Long](tracks.size)
+      byPid.indices.foreach { i =>
+        val pid = byPid(i).getInt(0)
+        carry((pid, chrom)) = acc.clone()
+        acc.indices.foreach(k => acc(k) += byPid(i).getLong(3 + k))
+        if (i + 1 < byPid.length)
+          nextPos((pid, chrom)) = byPid(i + 1).getLong(2)
+      }
+    }
+    Sweep(run, carry.toMap, nextPos.toMap)
+  }
+
+  /** The partition-local segment pass over a sweep with close events at
+    * stop + 1: one row (chrom, depth0 .. depth<k-1>, len) per segment
+    * [pos, next event pos) where some track's depth is positive. Depth
+    * starts from the carry at each partition's first row of a chrom; a
+    * partition's last row of a chrom ends at the chrom's next event
+    * (partition-local, else [[Sweep]]`.nextPos`), or emits nothing when
+    * the chrom ends there.
+    */
+  private[operators] def depthSegments(tracks: Seq[Track],
+      numPartitions: Int, op: String): DataFrame = {
+    val k = tracks.size
+    val Sweep(run, carry, nextPos) =
+      sweepRuns(tracks, closeShift = 1L, numPartitions, op)
+    val schema = StructType(StructField("chrom", StringType) +:
+      (0 until k).map(i => StructField(s"depth$i", LongType, false)) :+
+      StructField("len", LongType, false))
+    run.mapPartitions { (it: Iterator[Row]) =>
+      val b = it.buffered
+      var curChrom: String = null
+      var depth: Array[Long] = null
+      b.flatMap { r =>
+        val (pid, chrom, pos) = (r.getInt(0), r.getString(1), r.getLong(2))
+        if (chrom != curChrom) {
+          curChrom = chrom
+          depth = carry((pid, chrom)).clone()
+        }
+        var covered = false
+        for (i <- 0 until k) {
+          depth(i) += r.getLong(3 + i)
+          covered ||= depth(i) > 0
+        }
+        val next =
+          if (b.hasNext && b.head.getString(1) == chrom) Some(b.head.getLong(2))
+          else nextPos.get((pid, chrom))
+        next match {
+          case Some(np) if covered =>
+            Iterator.single(Row.fromSeq(chrom +: depth.toSeq :+ (np - pos)))
+          case _ => Iterator.empty
         }
       }
-      m.toMap
-    }
-    // first (chrom, pos) of the next non-empty partition after each pid
-    val firstOf: Map[Int, (String, Long)] = partials
-      .groupBy(_._1)
-      .map { case (pid, rows) =>
-        val f = rows.minBy(r => (r._2, r._4)); pid -> ((f._2, f._4))
-      }
-    val nextFirst: Map[Int, (String, Long)] = {
-      val pids = firstOf.keys.toArray.sorted
-      pids.zipWithIndex.flatMap { case (pid, i) =>
-        if (i + 1 < pids.length) Some(pid -> firstOf(pids(i + 1)))
-        else None
-      }.toMap
-    }
-    (run, offsets, nextFirst)
+    }(Encoders.row(schema))
   }
 
   def depthHistogram(
       intervals: DataFrame, chromCol: String, startCol: String,
-      endCol: String, numPartitions: Int = 0): DataFrame = {
-    val spark = intervals.sparkSession
-    import spark.implicits._
-    val (run, offsets, nextFirst) = sweepRuns(intervals, chromCol,
-      startCol, endCol, closeShift = 1L, numPartitions, "depthHistogram")
-    val segs = run.mapPartitions { it =>
-      val b = it.buffered
-      var curChrom: String = null
-      var depth = 0L
-      b.flatMap { case (pid, chrom, pos, delta) =>
-        if (chrom != curChrom) {
-          curChrom = chrom
-          depth = offsets.getOrElse((pid, chrom), 0L)
-        }
-        depth += delta
-        val nextPos: Option[Long] =
-          if (b.hasNext && b.head._2 == chrom) Some(b.head._3)
-          else nextFirst.get(pid) match {
-            case Some((c, p)) if c == chrom => Some(p)
-            case _ => None
-          }
-        nextPos match {
-          case Some(np) if depth > 0 => Iterator((depth, np - pos))
-          case _ => Iterator.empty[(Long, Long)]
-        }
-      }
-    }.toDF("depth", "bases")
-    segs.groupBy("depth").agg(sum("bases").as("n_bases"))
-  }
+      endCol: String, numPartitions: Int = 0): DataFrame =
+    depthSegments(Seq(Track(intervals, chromCol, startCol, endCol)),
+        numPartitions, "depthHistogram")
+      .groupBy(col("depth0").as("depth")).agg(sum("len").as("n_bases"))
 
   /** Per-chrom coverage summary (the mosdepth report): covered bases,
     * breadth at each depth threshold (bases covered ≥ t×), and mean
     * depth over covered bases — the QC numbers a sequencing pipeline
     * gates on.
     *
-    * Same distributed sweep as [[depthHistogram]], with the partition-
-    * local pass emitting (chrom, depth, len) segments; one hash
-    * aggregate per chrom then folds exact longs — Σlen, Σ(depth·len),
-    * per-threshold conditional sums — and the mean lands on the 1e-4
-    * lattice via round-half-up INTEGER division (2a+b) div 2b, no
-    * float path. Segment rows number O(2·intervals), aggregate state
-    * is one row per chrom.
+    * The shared sweep's (chrom, depth, len) segments ([[depthSegments]]);
+    * one hash aggregate per chrom then folds exact longs — Σlen,
+    * Σ(depth·len), per-threshold conditional sums — and the mean lands
+    * on the 1e-4 lattice via round-half-up INTEGER division (2a+b) div
+    * 2b, no float path. Segment rows number O(2·intervals), aggregate
+    * state is one row per chrom.
     *
     * Output: (chrom, covered_bases, breadth_ge_<t>…, mean_depth_e4).
     */
@@ -184,38 +215,15 @@ object IntervalDepth {
       : DataFrame = {
     require(thresholds.nonEmpty && thresholds.forall(_ >= 1),
       s"thresholds must be >= 1 (got $thresholds)")
-    val spark = intervals.sparkSession
-    import spark.implicits._
-    val (run, offsets, nextFirst) = sweepRuns(intervals, chromCol,
-      startCol, endCol, closeShift = 1L, numPartitions, "coverageSummary")
-    val segs = run.mapPartitions { it =>
-      val b = it.buffered
-      var curChrom: String = null
-      var depth = 0L
-      b.flatMap { case (pid, chrom, pos, delta) =>
-        if (chrom != curChrom) {
-          curChrom = chrom
-          depth = offsets.getOrElse((pid, chrom), 0L)
-        }
-        depth += delta
-        val nextPos: Option[Long] =
-          if (b.hasNext && b.head._2 == chrom) Some(b.head._3)
-          else nextFirst.get(pid) match {
-            case Some((c, p)) if c == chrom => Some(p)
-            case _ => None
-          }
-        nextPos match {
-          case Some(np) if depth > 0 => Iterator((chrom, depth, np - pos))
-          case _ => Iterator.empty[(String, Long, Long)]
-        }
-      }
-    }.toDF("chrom", "depth", "len")
+    val segs = depthSegments(
+      Seq(Track(intervals, chromCol, startCol, endCol)), numPartitions,
+      "coverageSummary")
     val aggs =
       Seq(sum(col("len")).as("covered_bases")) ++
       thresholds.map(t =>
-        sum(when(col("depth") >= t, col("len")).otherwise(lit(0L)))
+        sum(when(col("depth0") >= t, col("len")).otherwise(lit(0L)))
           .as(s"breadth_ge_$t")) ++
-      Seq(sum(col("depth") * col("len")).as("__ds"))
+      Seq(sum(col("depth0") * col("len")).as("__ds"))
     segs.groupBy("chrom").agg(aggs.head, aggs.tail: _*)
       .withColumn("mean_depth_e4",
         expr("(2 * __ds * 10000 + covered_bases) div (2 * covered_bases)"))
@@ -254,18 +262,19 @@ object IntervalDepth {
     require(maxGap >= 0, s"maxGap must be >= 0 (got $maxGap)")
     val spark = intervals.sparkSession
     import spark.implicits._
-    val (run, offsets, _) = sweepRuns(intervals, chromCol, startCol,
-      endCol, closeShift = 1L + maxGap, numPartitions, "coalesce")
+    val Sweep(run, carry, _) = sweepRuns(
+      Seq(Track(intervals, chromCol, startCol, endCol)),
+      closeShift = 1L + maxGap, numPartitions, "coalesce")
     // (pid, chrom, kind, pos): kind true = run start, false = run end.
     // Partition layout and intra-partition order survive mapPartitions,
     // so the rank pass below rides the same partitions — no new shuffle.
-    val bounds = run.mapPartitions { it =>
+    val bounds = run.as[(Int, String, Long, Long)].mapPartitions { it =>
       var curChrom: String = null
       var depth = 0L
       it.flatMap { case (pid, chrom, pos, delta) =>
         if (chrom != curChrom) {
           curChrom = chrom
-          depth = offsets.getOrElse((pid, chrom), 0L)
+          depth = carry((pid, chrom))(0)
         }
         val prev = depth
         depth += delta
@@ -372,131 +381,13 @@ object IntervalDepth {
       .join(nIv, Seq("chrom", "i"), "left")
       .join(cov, Seq("chrom", "i"), "left")
       .select(col("chrom"), col("w_start"), col("w_end"),
-        // functions.coalesce spelled out: the object's own
-        // coalesce(DataFrame, ...) shadows the import here
-        org.apache.spark.sql.functions.coalesce(
-          col("n_intervals"), lit(0L)).as("n_intervals"),
-        org.apache.spark.sql.functions.coalesce(
-          col("covered_bp"), lit(0L)).as("covered_bp"))
-  }
-
-  /** Two-track covered/intersection base counts in ONE sweep — the
-    * [[IntervalJoin.intervalJaccard]] engine. Both interval sets' events
-    * ride one (chrom, pos) range exchange as tagged deltas (da, db);
-    * the partition-local pass tracks both running depths and sums, per
-    * segment [pos, next pos): its length into a_bp when depth_a > 0,
-    * into b_bp when depth_b > 0, into inter_bp when both — exactly the
-    * per-position counts the old shape derived from TWO [[coalesce]]
-    * sweeps plus a merged-run bin join (a covered position is a
-    * position with positive depth; disjoint merged runs count it once;
-    * the clipped-overlap sum counts it once in the intersection). All
-    * integer sums — engine-bit-identical. Same input contract and
-    * model-sized driver state as [[depthHistogram]].
-    *
-    * Output: one row (a_bp, b_bp, inter_bp), zeros when empty.
-    */
-  private[operators] def twoTrackCoveredBp(
-      a: DataFrame, aChrom: String, aStartCol: String, aEndCol: String,
-      b: DataFrame, bChrom: String, bStartCol: String, bEndCol: String,
-      numPartitions: Int, op: String): DataFrame = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def iv(df: DataFrame, chromCol: String, startCol: String,
-        endCol: String): DataFrame = df.select(
-      when(col(chromCol).isNull,
-        raise_error(lit(s"$op: null chrom")))
-        .otherwise(col(chromCol).cast("string")).as("chrom"),
-      col(startCol).cast("long").as("s"),
-      when(col(endCol).cast("long") < col(startCol).cast("long"),
-        raise_error(concat(lit(s"$op: interval with end < "
-          + "start at chrom "), col(chromCol).cast("string"))))
-        .otherwise(col(endCol).cast("long")).as("e"))
-    def ev(df: DataFrame, tagA: Boolean): DataFrame = {
-      val (da, db) = if (tagA) (lit(1L), lit(0L)) else (lit(0L), lit(1L))
-      df.select(col("chrom"), col("s").as("pos"), da.as("da"), db.as("db"))
-        .unionAll(df.select(col("chrom"), (col("e") + 1L).as("pos"),
-          (-da).as("da"), (-db).as("db")))
-    }
-    val agg = ev(iv(a, aChrom, aStartCol, aEndCol), tagA = true)
-      .unionAll(ev(iv(b, bChrom, bStartCol, bEndCol), tagA = false))
-      .groupBy("chrom", "pos")
-      .agg(sum("da").as("da"), sum("db").as("db"))
-    val run = agg
-      .repartitionByRange(parts, col("chrom"), col("pos"))
-      .sortWithinPartitions("chrom", "pos")
-      .select(spark_partition_id().as("pid"), col("chrom"), col("pos"),
-        col("da"), col("db"))
-      .as[(Int, String, Long, Long, Long)]
-      .localCheckpoint()
-    // same KEY-CARDINALITY CONTRACT as sweepRuns: carry keys are
-    // chromosomes, so the collect is offset-vector-sized at any scale
-    val partials = run.groupBy("pid", "chrom")
-      .agg(sum("da").as("sa"), sum("db").as("sb"), min("pos").as("firstPos"))
-      .as[(Int, String, Long, Long, Long)].collect().sortBy(r => (r._2, r._1))
-    val offsets: Map[(Int, String), (Long, Long)] = {
-      val m = scala.collection.mutable.Map.empty[(Int, String), (Long, Long)]
-      partials.groupBy(_._2).foreach { case (chrom, rows) =>
-        var accA = 0L; var accB = 0L
-        rows.sortBy(_._1).foreach { case (pid, _, sa, sb, _) =>
-          m((pid, chrom)) = (accA, accB); accA += sa; accB += sb
-        }
-      }
-      m.toMap
-    }
-    val firstOf: Map[Int, (String, Long)] = partials
-      .groupBy(_._1)
-      .map { case (pid, rows) =>
-        val f = rows.minBy(r => (r._2, r._5)); pid -> ((f._2, f._5))
-      }
-    val nextFirst: Map[Int, (String, Long)] = {
-      val pids = firstOf.keys.toArray.sorted
-      pids.zipWithIndex.flatMap { case (pid, i) =>
-        if (i + 1 < pids.length) Some(pid -> firstOf(pids(i + 1)))
-        else None
-      }.toMap
-    }
-    val segs = run.mapPartitions { it =>
-      val buf = it.buffered
-      var curChrom: String = null
-      var depthA = 0L
-      var depthB = 0L
-      buf.flatMap { case (pid, chrom, pos, da, db) =>
-        if (chrom != curChrom) {
-          curChrom = chrom
-          val (oa, ob) = offsets.getOrElse((pid, chrom), (0L, 0L))
-          depthA = oa; depthB = ob
-        }
-        depthA += da
-        depthB += db
-        val nextPos: Option[Long] =
-          if (buf.hasNext && buf.head._2 == chrom) Some(buf.head._3)
-          else nextFirst.get(pid) match {
-            case Some((c, p)) if c == chrom => Some(p)
-            case _ => None
-          }
-        nextPos match {
-          case Some(np) if depthA > 0 || depthB > 0 =>
-            val len = np - pos
-            Iterator((
-              if (depthA > 0) len else 0L,
-              if (depthB > 0) len else 0L,
-              if (depthA > 0 && depthB > 0) len else 0L))
-          case _ => Iterator.empty[(Long, Long, Long)]
-        }
-      }
-    }.toDF("la", "lb", "li")
-    segs.agg(
-      coalesce2(sum("la")).as("a_bp"),
-      coalesce2(sum("lb")).as("b_bp"),
-      coalesce2(sum("li")).as("inter_bp"))
+        orZero(col("n_intervals")).as("n_intervals"),
+        orZero(col("covered_bp")).as("covered_bp"))
   }
 
   // functions.coalesce with a zero default, named to dodge this
   // object's own `coalesce` (the merge operator) shadowing it
-  private def coalesce2(c: org.apache.spark.sql.Column) =
+  private def orZero(c: Column): Column =
     org.apache.spark.sql.functions.coalesce(c, lit(0L))
 
   /** Uncovered-region complement (bedtools complement): the regions of
@@ -537,11 +428,7 @@ object IntervalDepth {
       .partitionBy("chrom").orderBy("start")
     withSentinel
       .withColumn("prevstop", lag("stop", 1).over(w))
-      // functions.coalesce spelled out: this object's `coalesce`
-      // (the merge operator) shadows the SQL function here
-      .select(col("chrom"),
-        (org.apache.spark.sql.functions.coalesce(
-          col("prevstop"), lit(0L)) + 1).as("start"),
+      .select(col("chrom"), (orZero(col("prevstop")) + 1).as("start"),
         (col("start") - 1).as("stop"))
       .filter(col("start") <= col("stop"))
   }

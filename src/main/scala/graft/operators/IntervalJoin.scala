@@ -195,14 +195,12 @@ object IntervalJoin {
     * dataset-overlap audit (e.g. two redaction passes, two extractor
     * versions).
     *
-    * Both sides first collapse to disjoint merged runs
-    * ([[IntervalDepth.coalesce]] — the distributed sweep), so each
-    * covered base is counted once per side; the intersection is the
-    * j2 bin-key equi-join over the MERGED runs (disjoint × disjoint:
-    * each overlapping pair contributes its exact clipped length once —
-    * owner-bin attribution makes the join exactly-once, no distinct
-    * exchange), and the union is
-    * |A| + |B| − |A∩B| by inclusion-exclusion — never a second sweep.
+    * Both tracks ride ONE [[IntervalDepth.depthSegments]] sweep as
+    * per-track delta columns — one range exchange, no merged-run
+    * materialization, no bin join: a_bp / b_bp sum segment lengths at
+    * positive per-track depth (each covered base counted once per side),
+    * inter_bp at both-positive, and the union is |A| + |B| − |A∩B| by
+    * inclusion-exclusion.
     *
     * Exact end-to-end: base-pair counts are integer sums; jaccard
     * lands on the 1e-6 lattice via round-half-up (2a + b) div 2b.
@@ -215,24 +213,14 @@ object IntervalJoin {
   def intervalJaccard(
       a: DataFrame, b: DataFrame,
       aChrom: String, aStartCol: String, aEndCol: String,
-      bChrom: String, bStartCol: String, bEndCol: String,
-      binWidth: Long = 1024L): DataFrame = {
-    // binWidth is retained for signature compatibility: the r14 shape
-    // runs both tracks through ONE tagged-delta sweep
-    // ([[IntervalDepth.twoTrackCoveredBp]]) — one range exchange, no
-    // merged-run materialization per side, no bin fan-out, no bin join —
-    // instead of two [[IntervalDepth.coalesce]] sweeps (2 range
-    // exchanges + 2 boundary checkpoints + 2 rank regroups) plus the
-    // owner-bin intersection join. Per-position counts are identical by
-    // construction: a_bp/b_bp sum segment lengths at positive per-track
-    // depth (= merged-run lengths), inter_bp at both-positive (= the
-    // clipped overlap sum over disjoint runs) — all exact longs, and
-    // the union/jaccard lattice algebra below is unchanged.
-    require(binWidth > 0, s"binWidth must be positive (got $binWidth)")
-    IntervalDepth.twoTrackCoveredBp(
-        a, aChrom, aStartCol, aEndCol,
-        b, bChrom, bStartCol, bEndCol,
-        numPartitions = 0, op = "intervalJaccard")
+      bChrom: String, bStartCol: String, bEndCol: String): DataFrame = {
+    def bp(covered: Column) = coalesce(sum(when(covered, col("len"))), lit(0L))
+    IntervalDepth.depthSegments(Seq(
+        IntervalDepth.Track(a, aChrom, aStartCol, aEndCol),
+        IntervalDepth.Track(b, bChrom, bStartCol, bEndCol)),
+        numPartitions = 0, "intervalJaccard")
+      .agg(bp(col("depth0") > 0).as("a_bp"), bp(col("depth1") > 0).as("b_bp"),
+        bp(col("depth0") > 0 && col("depth1") > 0).as("inter_bp"))
       .select(col("a_bp"), col("b_bp"), col("inter_bp"),
         (col("a_bp") + col("b_bp") - col("inter_bp")).as("union_bp"))
       .withColumn("jaccard_e6",
@@ -267,15 +255,10 @@ object IntervalJoin {
       : DataFrame = {
     require(maxGap >= 0, s"maxGap must be >= 0 (got $maxGap)")
     require(binWidth > 0, s"binWidth must be positive (got $binWidth)")
-    val q = df.select(
-      col(idCol).cast("long").as("iv_id"),
-      when(col(chromCol).isNull,
-        raise_error(lit("clusterIntervals: null chrom")))
-        .otherwise(col(chromCol).cast("string")).as("iv_chrom"),
-      col(startCol).cast("long").as("iv_start"),
-      when(col(endCol).cast("long") < col(startCol).cast("long"),
-        raise_error(lit("clusterIntervals: interval with end < start")))
-        .otherwise(col(endCol).cast("long")).as("iv_stop"))
+    val (chrom, start, stop) =
+      IntervalDepth.checkedSpan(chromCol, startCol, endCol, "clusterIntervals")
+    val q = df.select(col(idCol).cast("long").as("iv_id"),
+      chrom.as("iv_chrom"), start.as("iv_start"), stop.as("iv_stop"))
     val runs = IntervalDepth.coalesce(df, chromCol, startCol, endCol,
         maxGap)
       .select(col("chrom").as("run_chrom"), col("start").as("run_start"),
@@ -318,17 +301,13 @@ object IntervalJoin {
       bChrom: String, bStartCol: String, bEndCol: String,
       binWidth: Long = 1024L): DataFrame = {
     require(binWidth > 0, s"binWidth must be positive (got $binWidth)")
-    val q = a.select(
-      col(aIdCol).cast("long").as("a_id"),
-      // the same loud null-chrom / inverted-interval contract the sweep
-      // enforces on b — a silent null here would drop the row from the
-      // bin join and fabricate a full-coverage result
-      when(col(aChrom).isNull, raise_error(lit("subtract: null chrom")))
-        .otherwise(col(aChrom).cast("string")).as("chrom"),
-      col(aStartCol).cast("long").as("a_s"),
-      when(col(aEndCol).cast("long") < col(aStartCol).cast("long"),
-        raise_error(lit("subtract: interval with end < start")))
-        .otherwise(col(aEndCol).cast("long")).as("a_e"))
+    // the same loud null-chrom / inverted-interval contract the sweep
+    // enforces on b — a silent null here would drop the row from the
+    // bin join and fabricate a full-coverage result
+    val (chrom, start, stop) =
+      IntervalDepth.checkedSpan(aChrom, aStartCol, aEndCol, "subtract")
+    val q = a.select(col(aIdCol).cast("long").as("a_id"), chrom.as("chrom"),
+      start.as("a_s"), stop.as("a_e"))
     val bm = IntervalDepth.coalesce(b, bChrom, bStartCol, bEndCol)
       .select(col("chrom").as("b_chrom"), col("start").as("b_s"),
         col("stop").as("b_e"))

@@ -6,8 +6,14 @@ import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
 
-/** Regenerates PLANS.md: the formatted physical plan of each headline
-  * query at the given sf dir. `runMain graft.tools.DumpPlans [sfDir]`
+/** Formatted physical plans of the suite's queries.
+  *
+  *  - `runMain graft.tools.DumpPlans [sfDir]` regenerates PLANS.md: every
+  *    query's plan at the given sf dir, headline queries first.
+  *  - `runMain graft.tools.DumpPlans <sfDir> <round> <suffix> <query...>`
+  *    writes `plans/<round>/<query>_<suffix>.txt`, one file per named
+  *    query — the before/after plan evidence the optimization rounds
+  *    commit next to the code.
   */
 object DumpPlans {
   private val Headline = Seq(
@@ -87,31 +93,46 @@ object DumpPlans {
     Headline ++
       (graft.SparkEntry.queries.keySet -- Headline.toSet).toSeq.sorted
 
+  // `explain("formatted")` of one query. d15's collected Bloom filter
+  // rides in the plan as a binary literal (hundreds of KB of hex) —
+  // elide anything literal-shaped past 64 hex chars, keeping the plan
+  // structure readable
+  private def plan(spark: SparkSession, sfDir: String, name: String): String = {
+    val df = graft.SparkEntry.queries(name)(spark, sfDir)
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out)) { df.explain("formatted") }
+    out.toString.trim.replaceAll(
+      "0x[0-9A-F]{64}[0-9A-F]+", "0x<large binary literal elided>")
+  }
+
   def main(args: Array[String]): Unit = {
+    require(args.length <= 1 || args.length >= 4,
+      "usage: DumpPlans [sfDir] | DumpPlans <sfDir> <round> <suffix> <query...>")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = GraftSession.tune(
       SparkSession.builder().master("local[8]").appName("plans")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
-    sb.append(s"Auto-generated by `graft.tools.DumpPlans` over `$sfDir`.\n")
-    sb.append("Shapes to check: `PushedFilters`/`ReadSchema` on scans, ")
-    sb.append("`BroadcastHashJoin` on dimension joins, `*` codegen markers, ")
-    sb.append("no `CartesianProduct`.\n")
-    val names = allQueries
-    for (name <- names) {
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val out = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(out)) { df.explain("formatted") }
-      // d15's collected Bloom filter rides in the plan as a binary
-      // literal (hundreds of KB of hex) — elide anything literal-shaped
-      // past 64 hex chars, keeping the plan structure readable
-      val plan = out.toString.trim.replaceAll(
-        "0x[0-9A-F]{64}[0-9A-F]+", "0x<large binary literal elided>")
-      sb.append(s"\n## $name\n\n```\n$plan\n```\n")
+    if (args.length >= 4) {
+      val (round, suffix) = (args(1), args(2))
+      Files.createDirectories(Paths.get(s"plans/$round"))
+      for (name <- args.drop(3)) {
+        val file = s"plans/$round/${name}_$suffix.txt"
+        Files.writeString(Paths.get(file), plan(spark, sfDir, name) + "\n")
+        println(file)
+      }
+    } else {
+      val sb = new StringBuilder
+      sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
+      sb.append(s"Auto-generated by `graft.tools.DumpPlans` over `$sfDir`.\n")
+      sb.append("Shapes to check: `PushedFilters`/`ReadSchema` on scans, ")
+      sb.append("`BroadcastHashJoin` on dimension joins, `*` codegen markers, ")
+      sb.append("no `CartesianProduct`.\n")
+      val names = allQueries
+      for (name <- names)
+        sb.append(s"\n## $name\n\n```\n${plan(spark, sfDir, name)}\n```\n")
+      Files.writeString(Paths.get("PLANS.md"), sb.toString)
+      println(s"PLANS.md written (${names.size} plans)")
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"PLANS.md written (${names.size} plans)")
     spark.stop()
   }
 }

@@ -12,13 +12,22 @@ object VcfParser {
 
   /** Parse one tab-separated gVCF body line (columns as reference
     * `steps/gzToParquet.scala:14-23`). Returns Nil for header / malformed
-    * lines. The INFO column is split into a map once per line and shared by
-    * END, ANN/EFF, predictions and populations.
+    * lines: fewer than 10 columns, or a number (POS, END, DP, GQ, AD, a GT
+    * allele, an annotation score) that does not parse — one bad line is
+    * dropped rather than failing the whole ingest job. The INFO column is
+    * split into a map once per line and shared by END, ANN/EFF,
+    * predictions and populations.
     */
   def parseLine(line: String, sampleId: String, chrom: Int): Seq[Variant] = {
     if (line == null || line.isEmpty || line.startsWith("#")) return Nil
     val f = line.split("\t", -1)
-    if (f.length < 10) return Nil
+    if (f.length < 10) Nil
+    else try parseFields(f, sampleId, chrom)
+    catch { case _: NumberFormatException => Nil }
+  }
+
+  private def parseFields(f: Array[String], sampleId: String, chrom: Int)
+      : Seq[Variant] = {
     val pos = f(1).toInt
     val id = f(2)
     val ref = f(3)

@@ -52,5 +52,16 @@ class SqlFunctionsSpec extends AnyFunSuite {
         |               array(cast(3.0 as float), cast(0.5 as float))) AS d""".stripMargin
     ).collect().head
     assert(r.getAs[Double]("d") == 4.0)
+    // the extension's arity checks hold for per-session registration too
+    val one = intercept[Exception] {
+      spark.sql("SELECT fvec_dot(array(cast(1.0 as float)))").collect()
+    }
+    assert(one.getMessage.contains("fvec_dot(arrayFloat, arrayFloat)"),
+      one.getMessage)
+    val three = intercept[Exception] {
+      spark.sql("SELECT simhash64(split('a b', ' '), true, true)").collect()
+    }
+    assert(three.getMessage.contains("simhash64(tokensArray[, portable])"),
+      three.getMessage)
   }
 }

@@ -23,12 +23,18 @@ class IntervalDepthSpec extends AnyFunSuite {
   }
 
   test("depthHistogram equals a brute-force per-position model, any partitioning") {
-    // deterministic dense fixture: 3 chroms x 60 intervals over [0, 300)
+    // deterministic dense fixture: 3 chroms x 60 intervals over [0, 300),
+    // then two chroms whose JVM (UTF-16) order is the reverse of Spark's
+    // UTF-8 byte order: U+E000 sorts after U+1F600 in UTF-8 only
     val rng = new scala.util.Random(7)
-    val rows = for (c <- 1 to 3; i <- 1 to 60) yield {
+    val rows = (for (c <- 1 to 3; i <- 1 to 60) yield {
       val s = rng.nextInt(300).toLong
       (s"c$c", s, s + 1 + rng.nextInt(40))
-    }
+    }) ++ (for ((c, n) <- Seq("c\uE000" -> 200, "c\uD83D\uDE00" -> 20);
+        _ <- 1 to n) yield {
+      val s = rng.nextInt(300).toLong
+      (c, s, s + 1 + rng.nextInt(40))
+    })
     // independent model: literal per-position counting
     val expected = rows.groupBy(_._1).values.flatMap { ivs =>
       val depth = scala.collection.mutable.Map.empty[Long, Long]
@@ -131,19 +137,23 @@ class IntervalDepthSpec extends AnyFunSuite {
 
   test("coverageSummary equals a brute-force per-position model") {
     val rng = new scala.util.Random(7)
-    val rows = for (c <- 1 to 3; _ <- 1 to 50) yield {
+    val rows = (for (c <- 1 to 3; _ <- 1 to 50) yield {
       val s = rng.nextInt(800).toLong
       (s"c$c", s, s + 1 + rng.nextInt(60))
-    }
+    }) ++ (for ((c, n) <- Seq("c\uE000" -> 200, "c\uD83D\uDE00" -> 20);
+        _ <- 1 to n) yield {
+      val s = rng.nextInt(800).toLong
+      (c, s, s + 1 + rng.nextInt(60))
+    })
     val got = IntervalDepth.coverageSummary(
         rows.toDF("chrom", "start", "stop").repartition(7),
         "chrom", "start", "stop", thresholds = Seq(2L, 5L))
       .as[(String, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
-    (1 to 3).foreach { c =>
+    rows.map(_._1).distinct.foreach { c =>
       val depthAt = scala.collection.mutable.Map.empty[Long, Long]
         .withDefaultValue(0L)
-      rows.filter(_._1 == s"c$c").foreach { case (_, s, e) =>
+      rows.filter(_._1 == c).foreach { case (_, s, e) =>
         (s to e).foreach(p => depthAt(p) += 1)
       }
       val covered = depthAt.count(_._2 > 0).toLong
@@ -151,7 +161,7 @@ class IntervalDepthSpec extends AnyFunSuite {
       val b5 = depthAt.count(_._2 >= 5).toLong
       val ds = depthAt.values.sum
       val mean = (2 * ds * 10000 + covered) / (2 * covered)
-      assert(got(s"c$c") == ((s"c$c", covered, b2, b5, mean)), s"chrom c$c")
+      assert(got(c) == ((c, covered, b2, b5, mean)), s"chrom $c")
     }
   }
 

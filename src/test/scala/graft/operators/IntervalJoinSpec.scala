@@ -232,19 +232,25 @@ class IntervalJoinSpec extends AnyFunSuite {
       .toDF("chrom", "s", "e") // third row merges into [1,10]
     val b = Seq(("c1", 8L, 22L)).toDF("chrom", "s", "e")
     val got = IntervalJoin.intervalJaccard(a, b,
-        "chrom", "s", "e", "chrom", "s", "e", binWidth = 4L)
+        "chrom", "s", "e", "chrom", "s", "e")
       .as[(Long, Long, Long, Long, Option[Long])].collect().head
     assert(got._1 == 16L && got._2 == 15L && got._3 == 6L &&
       got._4 == 25L)
     // 6/25 = 0.24 on the lattice
     assert(got._5.contains(240000L))
-    // randomized brute force over base positions, multiple chroms,
-    // small bin width to force multi-bin pairs
+    // randomized brute force over base positions, multiple chroms, two
+    // of them (U+E000, U+1F600) ordered differently by the JVM (UTF-16)
+    // and by Spark (UTF-8 bytes)
     val rnd = new scala.util.Random(19)
     def randTrack() = (0 until 120).map { _ =>
       val c = s"c${rnd.nextInt(3)}"
       val s0 = rnd.nextInt(400).toLong
       (c, s0, s0 + rnd.nextInt(40).toLong)
+    } ++ Seq("c\uE000" -> 200, "c\uD83D\uDE00" -> 20).flatMap {
+      case (c, n) => (0 until n).map { _ =>
+        val s0 = rnd.nextInt(400).toLong
+        (c, s0, s0 + rnd.nextInt(40).toLong)
+      }
     }
     val (ta, tb) = (randTrack(), randTrack())
     def cover(t: Seq[(String, Long, Long)]) =
@@ -255,7 +261,7 @@ class IntervalJoinSpec extends AnyFunSuite {
     val r = IntervalJoin.intervalJaccard(
         ta.toDF("chrom", "s", "e").repartition(7),
         tb.toDF("chrom", "s", "e").repartition(3),
-        "chrom", "s", "e", "chrom", "s", "e", binWidth = 16L)
+        "chrom", "s", "e", "chrom", "s", "e")
       .as[(Long, Long, Long, Long, Option[Long])].collect().head
     assert((r._1, r._2, r._3, r._4) == want)
     // empty-vs-empty: no defined similarity

@@ -76,6 +76,23 @@ class VcfParserSpec extends AnyFunSuite {
     assert(VcfParser.parseLine("#CHROM\tPOS", "S", 1).isEmpty)
     assert(VcfParser.parseLine("1\t2\t3", "S", 1).isEmpty)
     assert(VcfParser.parseLine("", "S", 1).isEmpty)
+    // malformed numbers: POS, DP, GQ, AD, a GT allele, END
+    Seq(
+      Seq("1", "abc", ".", "G", "A,<NON_REF>", ".", ".", "DP=20",
+        "GT:AD:DP:GQ", "0/1:12,8:20:45"),
+      Seq("1", "100", ".", "G", "A,<NON_REF>", ".", ".", "DP=20",
+        "GT:AD:DP:GQ", "0/1:12,8:x:45"),
+      Seq("1", "100", ".", "G", "A,<NON_REF>", ".", ".", "DP=20",
+        "GT:AD:DP:GQ", "0/1:12,8:20:y"),
+      Seq("1", "100", ".", "G", "A,<NON_REF>", ".", ".", "DP=20",
+        "GT:AD:DP:GQ", "0/1:1x,20:20:45"),
+      Seq("1", "100", ".", "G", "A,<NON_REF>", ".", ".", "DP=20",
+        "GT:AD:DP:GQ", "0/z:12,8:20:45"),
+      Seq("1", "5000", ".", "T", "<NON_REF>", ".", ".", "END=.",
+        "GT:DP:GQ", "0/0:30:60")
+    ).foreach { cols =>
+      assert(VcfParser.parseLine(cols.mkString("\t"), "S", 1).isEmpty, cols)
+    }
   }
 
   test("indel flag from ref/alt lengths") {

@@ -69,17 +69,7 @@ object Bench {
     // output instead of the chain — clear it at bench start so every
     // recorded number is computed from the parquet inputs, and say so in
     // the artifact (`table_cache` marker) so a judge need not guess.
-    val tableCacheState = {
-      val dir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_TABLE_CACHE",
-        System.getProperty("java.io.tmpdir") + "/graft-table-cache"))
-      val existed = dir.exists()
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      try { if (existed) rm(dir); if (existed) "cleared" else "absent" }
-      catch { case _: Throwable => "clear_failed" }
-    }
+    val tableCacheState = SparkEntry.clearTableCache(SparkEntry.tableCacheRoot)
     // Each query is timed `runs` times (default 3, override with
     // SPARK_GRAFT_BENCH_RUNS or --runs N) and the min reported: a single
     // timing on a shared machine measures the neighbors (background JVMs

@@ -574,10 +574,37 @@ object SparkEntry {
     * would key on the table snapshot id instead).
     */
   private val D6ClusterCacheVersion = "v1"
+  private val D6ClusterCachePrefix = "d6clusters_"
   private[graft] def d6ClusterCacheDir(d: String): String =
+    tableCacheRoot + "/" + D6ClusterCachePrefix +
+      d.replaceAll("[^A-Za-z0-9.]", "_")
+
+  /** Root of the durable cross-run table cache; the d6 cluster tables
+    * are its only entries.
+    */
+  private[graft] def tableCacheRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_TABLE_CACHE",
-      System.getProperty("java.io.tmpdir") + "/graft-table-cache") +
-      "/d6clusters_" + d.replaceAll("[^A-Za-z0-9.]", "_")
+      System.getProperty("java.io.tmpdir") + "/graft-table-cache")
+
+  /** Deletes the d6 cluster-cache entries under `root` and nothing else
+    * there, so a cache root pointed at a shared directory loses no other
+    * file. Returns the bench's `table_cache` marker: "cleared" when the
+    * root exists, "absent" when it does not, "clear_failed" when a
+    * deletion throws.
+    */
+  private[graft] def clearTableCache(root: String): String = {
+    val dir = new java.io.File(root)
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+      f.delete(); ()
+    }
+    if (!dir.exists()) "absent"
+    else try {
+      Option(dir.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith(D6ClusterCachePrefix)).foreach(rm)
+      "cleared"
+    } catch { case _: Throwable => "clear_failed" }
+  }
   private[graft] def d6ClusterFingerprint(s: SparkSession, d: String): String = {
     val n = T(s, d, "documents").count()
     val mtime = new java.io.File(s"$d/documents.parquet").lastModified()

@@ -21,17 +21,6 @@ object Classifier {
   case class LinearModel(
       bias: Double, weights: Array[Double], lr: Double, grid: Int)
 
-  /** Ensure enough partitions to use the cluster for fan-out-heavy work
-    * (the [[Dedup]] spread discipline). A no-op at real scale (many input
-    * splits); matters for the harness's single-row-group files, which
-    * Spark cannot split — without it the items × reps md5 fan-out of the
-    * bootstrap operators runs in ONE task.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.max(2, p / 2)) df.repartition(p) else df
-  }
-
   /** The softsign link σ(z) = 0.5·(1 + z/(1+|z|)) — a logistic-shaped
     * squashing onto (0,1) built from +,·,/,|·| only. Chosen over exp's
     * logistic because it is bit-reproducible across engines: IEEE
@@ -380,7 +369,7 @@ object Classifier {
       reps: Int = 200): DataFrame = {
     require(reps >= 40 && reps <= 10000,
       s"reps must be in [40, 10000] (got $reps)")
-    val items = spread(df.select(
+    val items = Guards.spread(df.select(
         col(idCol).cast("string").as("id"),
         when(col(correctCol).isNull ||
             !col(correctCol).cast("long").isin(0L, 1L),
@@ -447,7 +436,7 @@ object Classifier {
       when(col(c).isNull || !col(c).cast("long").isin(0L, 1L),
         raise_error(lit(s"bootstrapDeltaCI: $side must be 0/1")))
         .otherwise(col(c).cast("long"))
-    val items = spread(df.select(
+    val items = Guards.spread(df.select(
         col(idCol).cast("string").as("id"),
         checked01(aCol, "a").as("ya"), checked01(bCol, "b").as("yb")))
       .localCheckpoint() // feeds the fan-out and the point estimates
@@ -613,12 +602,18 @@ object Classifier {
     // (id,c) join + a checkpoint with ONE id exchange. Same integers:
     // sc = prior + default·n_d + Σ_tokens adj(c, t), every term an
     // exact long on both shapes. Over the cap (or cap 0) the join
-    // chain below runs unchanged.
-    if (broadcastModelCapRows > 0 &&
-        model.select(col("t")).limit(broadcastModelCapRows + 1).count()
-          <= broadcastModelCapRows) {
-      val statsRows = classStats.select("c", "prior_e6", "default_e6")
-        .collect().sortBy(_.getString(0))
+    // chain below runs unchanged, and so it does for class stats holding
+    // a null class, prior or default, which have no pivot column or
+    // exact long here.
+    val broadcastStats =
+      if (broadcastModelCapRows > 0 &&
+          model.select(col("t")).limit(broadcastModelCapRows + 1).count()
+            <= broadcastModelCapRows)
+        Some(classStats.select("c", "prior_e6", "default_e6").collect())
+          .filterNot(_.exists(_.anyNull))
+      else None
+    if (broadcastStats.isDefined) {
+      val statsRows = broadcastStats.get.sortBy(_.getString(0))
       val spark0 = applyDf.sparkSession
       if (statsRows.isEmpty) {
         // no trained classes — the join chain yields no rows either
@@ -633,7 +628,7 @@ object Classifier {
       val adjCols = statsRows.zipWithIndex.map { case (r, i) =>
         sum(when(col("c") === r.getString(0), col("adj_e6"))).as(s"__adj$i") }
       val pivot = model.groupBy("t").agg(adjCols.head, adjCols.tail: _*)
-      val tok = spread(applyDf.select(col(idCol).as("id"), col(textCol)))
+      val tok = Guards.spread(applyDf.select(col(idCol).as("id"), col(textCol)))
         .select(col("id"), explode(tokens(checkedText)).as("t"))
       val aggCols = count(lit(1)).as("n_d") +:
         statsRows.indices.map(i =>
@@ -649,7 +644,7 @@ object Classifier {
       return agg.select(col("id"), m.getField("c").as("pred"),
         (-m.getField("ns")).as("score_e6"))
     }
-    val ap = spread(applyDf.select(col(idCol).as("id"), col(textCol)))
+    val ap = Guards.spread(applyDf.select(col(idCol).as("id"), col(textCol)))
       .select(col("id"), explode(tokens(checkedText)).as("t"))
       .groupBy("id", "t").agg(count(lit(1)).as("k"))
       // lazy: the first consumer's job materializes the cache in

@@ -236,7 +236,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val L = minTokens
     val toks = TextFunctions.tokens(col(textCol))
-    val grams = spread(docs.select(col(idCol), col(textCol)))
+    val grams = Guards.spread(docs.select(col(idCol), col(textCol)))
       .select(col(idCol).cast("long").as("id"), toks.as("w"), size(toks).as("n"))
       .filter(col("n") >= L)
       .select(col("id"), col("w"),
@@ -297,15 +297,6 @@ object Dedup {
       .select((-col("m.nid")).as("id"), col("url_canon"), col("n_dups"))
   }
 
-  /** Ensure enough partitions to use the cluster for explode-heavy work.
-    * A no-op at real scale (many input splits); matters for the harness's
-    * single-row-group files, which Spark cannot split.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.max(2, p / 2)) df.repartition(p) else df
-  }
-
   /** Distinct (id, shkey) rows: every distinct n-word shingle per doc,
     * identified by a 64-bit xxhash of its token hashes — smaller to
     * shuffle than the shingle string; collision odds across <2^32
@@ -335,7 +326,7 @@ object Dedup {
   private[graft] def shingleSets(
       docs: DataFrame, idCol: String, textCol: String, n: Int,
       portable: Boolean = false): DataFrame =
-    spread(docs).select(
+    Guards.spread(docs).select(
         col(idCol).as("id"),
         array_distinct(graft.functions.ShingleFunctions.shingleKeys(
           TextFunctions.tokens(col(textCol)), n, portable)).as("ss"))
@@ -352,7 +343,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val tokHash: Column => Column =
       if (portable) portableTokenHash else (c => xxhash64(c))
-    val tok = spread(docs).select(
+    val tok = Guards.spread(docs).select(
         col(idCol).as("id"),
         posexplode(TextFunctions.tokens(col(textCol))).as(Seq("pos", "t")))
       .select(col("id"), col("pos"), tokHash(col("t")).as("th"))
@@ -1151,7 +1142,7 @@ object Dedup {
     // the whole vector corpus to executor disk and reading that back.
     val side = df.select(
       col(idCol).as("id"), col(vecCol).as("v"), fnorm(col(vecCol)).as("n"))
-    val keyed = spread(side).select(
+    val keyed = Guards.spread(side).select(
         col("id"),
         posexplode(Similarity.bandedSignKeys(col("v"), bands, planesPerBand, vdim, seed))
           .as(Seq("band", "key")))
@@ -1193,7 +1184,7 @@ object Dedup {
     import graft.functions.VectorFunctions._
     val side = df.select(
       col(idCol).as("id"), col(vecCol).as("v"), fnorm(col(vecCol)).as("n"))
-    spread(side).as("a")
+    Guards.spread(side).as("a")
       .join(broadcast(side.as("b")), col("a.id") < col("b.id"))
       .select(
         col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -1229,7 +1220,7 @@ object Dedup {
     // subtree (same `sp` val — exchange reuse needs canonically equal
     // plans, so no per-side spread), letting AQE evaluate the argmin
     // projection once instead of once per side under a broadcast.
-    val sp = spread(side)
+    val sp = Guards.spread(side)
     val dup = sp.as("a").hint("shuffle_hash")
       .join(sp.as("b").hint("shuffle_hash"),
         col("a.cluster") === col("b.cluster") && col("a.id") > col("b.id"))
@@ -1557,7 +1548,7 @@ object Dedup {
     if (tokenHash.eq(defaultTokenHash) || tokenHash.eq(portableTokenHash)) {
       // null-text docs have no token rows in the relational form and so
       // no signature — mirror that by filtering, not emitting null
-      return spread(docs).filter(col(textCol).isNotNull).select(
+      return Guards.spread(docs).filter(col(textCol).isNotNull).select(
         col(idCol).as("id"),
         graft.functions.ShingleFunctions.simhash64(
           TextFunctions.tokens(col(textCol)),
@@ -1566,7 +1557,7 @@ object Dedup {
     // Pre-aggregate to (id, token-hash, weight) first: the 64 bit-sums then
     // run over distinct hashes per doc instead of every token occurrence —
     // identical result (sign sums weighted by counts), much smaller input.
-    val th = spread(docs).select(
+    val th = Guards.spread(docs).select(
         col(idCol).as("id"),
         explode(TextFunctions.tokens(col(textCol))).as("t"))
       .groupBy(col("id"), tokenHash(col("t")).as("h"))

@@ -165,9 +165,14 @@ object Graph {
           "positive integers, got "), col(c).cast("string"))))
         .otherwise(d.cast("long"))
     }.getOrElse(lit(1L))
+    // An edge with a null endpoint and a null seed name are dropped
+    // before either path ([[hits]]' rule): a null node would otherwise
+    // take part in the driver loop but never match a distributed join.
     val raw = edges.select(
-      col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"), w.as("w"))
+        col(srcCol).cast("string").as("src"),
+        col(dstCol).cast("string").as("dst"), w.as("w"))
+      .na.drop(Seq("src", "dst"))
+    val seedNodes = seeds.map(_.na.drop().distinct())
     val scale = math.pow(10.0, grid) // exact: 10^grid < 2^53 for grid <= 15
     // Driver fast path: sub-cap edge lists iterate as plain Scala on
     // the SAME lattice (identical IEEE multiply/divide/floor order,
@@ -179,20 +184,18 @@ object Graph {
     // out-weight totals, node set and teleport count are all exact
     // integer/set algebra, computed here from the collected rows
     // (measured: that Spark preamble was ~2.5 s of g1's 4.4 s on the
-    // 10x corpus while the rank loop itself is milliseconds). Rows with
-    // a null src are dropped exactly as the distributed outW inner join
-    // drops them.
+    // 10x corpus while the rank loop itself is milliseconds).
     val rawRowsOpt = subCapRows(raw, driverCapRows)
     val seedSetOpt: Option[Option[Set[String]]] =
       if (rawRowsOpt.isEmpty) None
-      else seeds match {
+      else seedNodes match {
         case None => Some(None)
         case Some(s) =>
-          subCapRows(s.distinct(), driverCapRows)
+          subCapRows(s, driverCapRows)
             .map(rows => Some(rows.map(_.getString(0)).toSet))
       }
     if (rawRowsOpt.isDefined && seedSetOpt.isDefined) {
-      val rawRows = rawRowsOpt.get.filter(!_.isNullAt(0))
+      val rawRows = rawRowsOpt.get
       val seedSet = seedSetOpt.get
       // parallel-edge collapse + out-weights: exact long sums, any order
       val wByEdge = scala.collection.mutable.LinkedHashMap
@@ -263,10 +266,10 @@ object Graph {
     // re-joined every round.
     val allNodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    val nodes = (seeds match {
+    val nodes = (seedNodes match {
       case None => allNodes.withColumn("tele", lit(true))
       case Some(s) =>
-        allNodes.join(s.distinct().withColumn("__s", lit(1)),
+        allNodes.join(s.withColumn("__s", lit(1)),
             Seq("node"), "left")
           .select(col("node"), col("__s").isNotNull.as("tele"))
     }).localCheckpoint()

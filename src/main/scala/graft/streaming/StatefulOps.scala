@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions.{col, timestamp_micros}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -33,6 +33,67 @@ object StatefulOps {
   }
 
   val DefaultGapUs: Long = 30L * 60 * 1000 * 1000 // 30 min
+
+  /** The Append-mode per-key fold behind every `*Stream` twin without
+    * an idle flush: group by `key`, hand each key's micro-batch events
+    * and stored state to `advance`, store the state it returns and emit
+    * its rows. No timeout is registered, so the engine only invokes a
+    * key that has data this batch (the `advance*` functions' "events or
+    * prior state" invariant) and idle streams run no state-scan
+    * micro-batches.
+    */
+  private def appendFold[E, K: Encoder, S: Encoder, O: Encoder](
+      ds: Dataset[E])(key: E => K)(
+      advance: (K, IndexedSeq[E], Option[S]) => (Seq[O], S)): Dataset[O] =
+    ds.groupByKey(key)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (k: K, evs: Iterator[E], state: GroupState[S]) =>
+          val (rows, st) = advance(k, evs.toIndexedSeq, state.getOption)
+          state.update(st)
+          rows.iterator
+      }
+
+  /** The event-time idle flush behind [[sessionPathsStream]] and
+    * [[conversationStatsStream]]: `ts_us` becomes the watermarked
+    * `event_time` column, each key's micro-batch folds through
+    * `advance` like [[appendFold]], and the key's timeout re-arms at
+    * `endUs(state) + gapUs`. Once the watermark passes it, `flush` emits
+    * the key's last row and the state is removed.
+    *
+    * EventTimeTimeout, not ProcessingTimeTimeout, deliberately: with a
+    * default (0-interval) trigger, any registered processing-time
+    * timeout makes the engine run a state-scan micro-batch EVERY
+    * trigger — a busy loop burning a stage per trigger on idle streams
+    * (measured: thousands of stages in minutes; `processAllAvailable`
+    * never quiesces). Event-time timeouts only arm on watermark
+    * movement, which only happens on data.
+    */
+  private def idleFlushFold[W: Encoder, K: Encoder, S: Encoder, O: Encoder](
+      ds: Dataset[_], watermarkDelay: String, gapUs: Long,
+      key: W => K, endUs: S => Long, flush: (K, S) => O)(
+      advance: (K, IndexedSeq[W], Option[S]) => (Seq[O], S)): Dataset[O] =
+    ds.withColumn("event_time", timestamp_micros(col("ts_us")))
+      .withWatermark("event_time", watermarkDelay)
+      .as[W]
+      .groupByKey(key)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: K, evs: Iterator[W], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            val s = state.get
+            state.remove()
+            Iterator.single(flush(k, s))
+          } else {
+            val (rows, cur) = advance(k, evs.toIndexedSeq, state.getOption)
+            state.update(cur)
+            // the timeout must stay strictly above the current watermark
+            // or the engine rejects it
+            state.setTimeoutTimestamp(math.max((endUs(cur) + gapUs) / 1000,
+              state.getCurrentWatermarkMs() + 1))
+            rows.iterator
+          }
+      }
 
   /** Batch sessionizer: split each user's event stream on silences longer
     * than `gapUs`. Same semantics as the `w4_sessionize` SQL query;
@@ -141,15 +202,9 @@ object StatefulOps {
     require(steps.nonEmpty && steps.distinct.size == steps.size,
       "funnel steps must be non-empty and distinct")
     val stepsIdx = steps.toIndexedSeq
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelCursor, StepHit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, evs: Iterator[TypedEv], state: GroupState[FunnelCursor]) =>
-          val (hits, cur) =
-            advanceFunnel(stepsIdx, evs.toIndexedSeq, state.getOption)
-          state.update(cur)
-          hits.iterator
-      }
+    appendFold(ds)(_.user_id) { (_, evs, prior: Option[FunnelCursor]) =>
+      advanceFunnel(stepsIdx, evs, prior)
+    }
   }
 
   case class PathEv(user_id: Long, ts_us: Long, eid: Long, et: String)
@@ -200,14 +255,8 @@ object StatefulOps {
     *
     * Idle flush is EVENT-TIME: the state times out once the watermark
     * passes session end + gap, so a user who stops sending events still
-    * emits their last session when the stream's clock moves past it.
-    * EventTimeTimeout, not ProcessingTimeTimeout, deliberately: with a
-    * default (0-interval) trigger, any registered processing-time
-    * timeout makes the engine run a state-scan micro-batch EVERY
-    * trigger — a busy loop burning a stage per trigger on idle streams
-    * (measured: thousands of stages in minutes; `processAllAvailable`
-    * never quiesces). Event-time timeouts only arm on watermark
-    * movement, which only happens on data.
+    * emits their last session when the stream's clock moves past it
+    * ([[idleFlushFold]]).
     */
   def sessionPathsStream(
       spark: SparkSession, ds: Dataset[PathEv],
@@ -216,31 +265,12 @@ object StatefulOps {
     require(gapUs > 0, "session gap must be positive") // batch-twin guard
     require(maxSteps >= 1, "paths need at least one step")
     import spark.implicits._
-    ds.withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", watermarkDelay)
-      .as[PathEvW]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[PathSession, PathSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, evs: Iterator[PathEvW], state: GroupState[PathSession]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(s)
-          } else {
-            val (closed, cur) = advancePaths(user,
-              evs.map(e => PathEv(e.user_id, e.ts_us, e.eid, e.et))
-                .toIndexedSeq,
-              state.getOption, gapUs, maxSteps)
-            state.update(cur)
-            // arm the idle flush at end + gap in event time; must stay
-            // strictly above the current watermark or the engine rejects
-            val wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-              math.max((cur.end_us + gapUs) / 1000, wm + 1))
-            closed.iterator
-          }
-      }
+    idleFlushFold[PathEvW, Long, PathSession, PathSession](
+        ds, watermarkDelay, gapUs, _.user_id, _.end_us, (_, s) => s) {
+      (user, evs, prior) => advancePaths(user,
+        evs.map(e => PathEv(e.user_id, e.ts_us, e.eid, e.et)), prior,
+        gapUs, maxSteps)
+    }
   }
 
   private[streaming] case class PathEvW(
@@ -285,15 +315,9 @@ object StatefulOps {
   def transitionsStream(
       spark: SparkSession, ds: Dataset[PathEv]): Dataset[Transition] = {
     import spark.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEv, Transition](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[PathEv], state: GroupState[LastEv]) =>
-          val (pairs, last) =
-            advanceTransitions(user, evs.toIndexedSeq, state.getOption)
-          state.update(last)
-          pairs.iterator
-      }
+    appendFold(ds)(_.user_id) { (user, evs, prior: Option[LastEv]) =>
+      advanceTransitions(user, evs, prior)
+    }
   }
 
   case class GapEv(user_id: Long, ts_ns: Long, eid: Long)
@@ -345,15 +369,7 @@ object StatefulOps {
   def gapsStream(
       spark: SparkSession, ds: Dataset[GapEv]): Dataset[GapRow] = {
     import spark.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastGap, GapRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[GapEv], state: GroupState[LastGap]) =>
-          val (rows, last) =
-            advanceGaps(user, evs.toIndexedSeq, state.getOption)
-          state.update(last)
-          rows.iterator
-      }
+    appendFold(ds)(_.user_id)(advanceGaps)
   }
 
   case class PairEv(k1: String, k2: String)
@@ -368,16 +384,10 @@ object StatefulOps {
   def pairCountsStream(
       spark: SparkSession, ds: Dataset[PairEv]): Dataset[PairCount] = {
     import spark.implicits._
-    ds.groupByKey(e => (e.k1, e.k2))
-      .flatMapGroupsWithState[CountState, PairCount](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (k: (String, String), evs: Iterator[PairEv],
-         state: GroupState[CountState]) =>
-          val (rows, st) = advanceCount(k._1, evs.size.toLong,
-            state.getOption)
-          state.update(st)
-          rows.iterator.map(r => PairCount(k._1, k._2, r.c))
-      }
+    appendFold(ds)(e => (e.k1, e.k2)) { (k, evs, prior: Option[CountState]) =>
+      val (rows, st) = advanceCount(k._1, evs.size.toLong, prior)
+      (rows.map(r => PairCount(k._1, k._2, r.c)), st)
+    }
   }
 
   case class TypedGapEv(user_id: Long, event_type: String, ts_ns: Long)
@@ -421,16 +431,10 @@ object StatefulOps {
       spark: SparkSession, ds: Dataset[TypedGapEv])
       : Dataset[TypedGapRow] = {
     import spark.implicits._
-    ds.groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState[LastTypedGap, TypedGapRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (k: (Long, String), evs: Iterator[TypedGapEv],
-         state: GroupState[LastTypedGap]) =>
-          val (rows, last) =
-            advanceTypedGaps(k._2, evs.toIndexedSeq, state.getOption)
-          state.update(last)
-          rows.iterator
-      }
+    appendFold(ds)(e => (e.user_id, e.event_type)) {
+      (k, evs, prior: Option[LastTypedGap]) =>
+        advanceTypedGaps(k._2, evs, prior)
+    }
   }
 
   case class SpanEv(user_id: Long, day: Long)
@@ -466,15 +470,9 @@ object StatefulOps {
   def userSpanStream(
       spark: SparkSession, ds: Dataset[SpanEv]): Dataset[SpanRow] = {
     import spark.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserSpan, SpanRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (u: Long, evs: Iterator[SpanEv], state: GroupState[UserSpan]) =>
-          val (rows, st) =
-            advanceSpans(u, evs.map(_.day).toIndexedSeq, state.getOption)
-          state.update(st)
-          rows.iterator
-      }
+    appendFold(ds)(_.user_id) { (u, evs, prior: Option[UserSpan]) =>
+      advanceSpans(u, evs.map(_.day), prior)
+    }
   }
 
   case class TransEv(
@@ -529,15 +527,9 @@ object StatefulOps {
   def transitionPairsStream(
       spark: SparkSession, ds: Dataset[TransEv]): Dataset[TransPair] = {
     import spark.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastTrans, TransPair](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, evs: Iterator[TransEv], state: GroupState[LastTrans]) =>
-          val (rows, last) =
-            advanceTransitions(evs.toIndexedSeq, state.getOption)
-          state.update(last)
-          rows.iterator
-      }
+    appendFold(ds)(_.user_id) { (_, evs, prior: Option[LastTrans]) =>
+      advanceTransitions(evs, prior)
+    }
   }
 
   case class FanoEv(ts_ns: Long, event_type: String)
@@ -607,15 +599,9 @@ object StatefulOps {
     require(windowDays >= 1 && windowDays <= 366,
       s"windowDays must be in [1, 366] (got $windowDays)")
     import spark.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[DaySet, DayEv](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[DayEv], state: GroupState[DaySet]) =>
-          val (rows, st) = advanceDays(
-            user, evs.map(_.day).toIndexedSeq, state.getOption, windowDays)
-          state.update(st)
-          rows.iterator
-      }
+    appendFold(ds)(_.user_id) { (user, evs, prior: Option[DaySet]) =>
+      advanceDays(user, evs.map(_.day), prior, windowDays)
+    }
   }
 
   case class BucketEv(event_type: String, bucket: Long)
@@ -683,16 +669,9 @@ object StatefulOps {
       baseline: Int = 24, minBaseline: Int = 12, z: Int = 3)
       : Dataset[RateRow] = {
     import spark.implicits._
-    ds.groupByKey(_.event_type)
-      .flatMapGroupsWithState[RateState, RateRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (et: String, evs: Iterator[BucketEv], state: GroupState[RateState]) =>
-          val (rows, st) = advanceRate(
-            et, evs.map(_.bucket).toIndexedSeq, state.getOption,
-            baseline, minBaseline, z)
-          state.update(st)
-          rows.iterator
-      }
+    appendFold(ds)(_.event_type) { (et, evs, prior: Option[RateState]) =>
+      advanceRate(et, evs.map(_.bucket), prior, baseline, minBaseline, z)
+    }
   }
 
   case class CusumState(s: Long, open_bucket: Long, open_count: Long)
@@ -746,15 +725,9 @@ object StatefulOps {
       k: Long, h: Long): Dataset[CusumRow] = {
     require(k >= 0 && h > 0, "need k >= 0 and h > 0")
     import spark.implicits._
-    ds.groupByKey(_.event_type)
-      .flatMapGroupsWithState[CusumState, CusumRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (et: String, evs: Iterator[BucketEv], state: GroupState[CusumState]) =>
-          val (rows, st) = advanceCusum(
-            et, evs.map(_.bucket).toIndexedSeq, state.getOption, k, h)
-          state.update(st)
-          rows.iterator
-      }
+    appendFold(ds)(_.event_type) { (et, evs, prior: Option[CusumState]) =>
+      advanceCusum(et, evs.map(_.bucket), prior, k, h)
+    }
   }
 
   case class SeasonEv(event_type: String, hour_of_week: Long)
@@ -803,16 +776,9 @@ object StatefulOps {
   def seasonalityStream(
       spark: SparkSession, ds: Dataset[SeasonEv]): Dataset[SeasonCount] = {
     import spark.implicits._
-    ds.groupByKey(_.event_type)
-      .flatMapGroupsWithState[SeasonState, SeasonCount](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (et: String, evs: Iterator[SeasonEv],
-         state: GroupState[SeasonState]) =>
-          val (rows, st) = advanceSeason(
-            et, evs.map(_.hour_of_week).toIndexedSeq, state.getOption)
-          state.update(st)
-          rows.iterator
-      }
+    appendFold(ds)(_.event_type) { (et, evs, prior: Option[SeasonState]) =>
+      advanceSeason(et, evs.map(_.hour_of_week), prior)
+    }
   }
 
   case class AbEv(user_id: Long, variant: String, event_type: String)
@@ -872,16 +838,9 @@ object StatefulOps {
   def abFirstsStream(
       spark: SparkSession, ds: Dataset[AbEv]): Dataset[AbFirst] = {
     import spark.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[AbState, AbFirst](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, evs: Iterator[AbEv], state: GroupState[AbState]) =>
-          val (rows, st) = advanceAb(
-            user, evs.map(e => (e.variant, e.event_type)).toIndexedSeq,
-            state.getOption)
-          state.update(st)
-          rows.iterator
-      }
+    appendFold(ds)(_.user_id) { (user, evs, prior: Option[AbState]) =>
+      advanceAb(user, evs.map(e => (e.variant, e.event_type)), prior)
+    }
   }
 
   case class KeyEv(k: String)
@@ -913,14 +872,9 @@ object StatefulOps {
   def keyCountsStream(
       spark: SparkSession, ds: Dataset[KeyEv]): Dataset[KeyCount] = {
     import spark.implicits._
-    ds.groupByKey(_.k)
-      .flatMapGroupsWithState[CountState, KeyCount](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (k: String, evs: Iterator[KeyEv], state: GroupState[CountState]) =>
-          val (rows, st) = advanceCount(k, evs.size.toLong, state.getOption)
-          state.update(st)
-          rows.iterator
-      }
+    appendFold(ds)(_.k) { (k, evs, prior: Option[CountState]) =>
+      advanceCount(k, evs.size.toLong, prior)
+    }
   }
 
   case class TypedBucketCount(event_type: String, bucket: Long, x: Long)
@@ -939,16 +893,11 @@ object StatefulOps {
       spark: SparkSession, ds: Dataset[BucketEv])
       : Dataset[TypedBucketCount] = {
     import spark.implicits._
-    ds.groupByKey(e => (e.event_type, e.bucket))
-      .flatMapGroupsWithState[CountState, TypedBucketCount](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (k: (String, Long), evs: Iterator[BucketEv],
-         state: GroupState[CountState]) =>
-          val (rows, st) = advanceCount(k._1, evs.size.toLong,
-            state.getOption)
-          state.update(st)
-          rows.iterator.map(r => TypedBucketCount(k._1, k._2, r.c))
-      }
+    appendFold(ds)(e => (e.event_type, e.bucket)) {
+      (k, evs, prior: Option[CountState]) =>
+        val (rows, st) = advanceCount(k._1, evs.size.toLong, prior)
+        (rows.map(r => TypedBucketCount(k._1, k._2, r.c)), st)
+    }
   }
 
   /** Streaming sessionizer: closes a session when the processing-time
@@ -1049,33 +998,16 @@ object StatefulOps {
     require(gapUs > 0, "conversation idle gap must be positive")
     require(maxTurns >= 2, s"maxTurns must be >= 2 (got $maxTurns)")
     import spark.implicits._
-    ds.withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", watermarkDelay)
-      .as[ChatTurnW]
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState[ConvState, ConvStats](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (conv: Long, evs: Iterator[ChatTurnW],
-            state: GroupState[ConvState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(foldConv(conv, s.turns, s.overflow))
-          } else {
-            val prev = state.getOption
-              .getOrElse(ConvState(Seq.empty, 0L, overflow = false))
-            val incoming = evs
-              .map(e => (e.ord, e.role, e.n_chars, e.ts_us)).toIndexedSeq
-            val merged = prev.turns ++ incoming.map(t => (t._1, t._2, t._3))
-            val over = prev.overflow || merged.size > maxTurns
-            val cur = ConvState(merged.take(maxTurns),
-              math.max(prev.end_us, incoming.map(_._4).max), over)
-            state.update(cur)
-            val wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-              math.max((cur.end_us + gapUs) / 1000, wm + 1))
-            Iterator.empty
-          }
-      }
+    idleFlushFold[ChatTurnW, Long, ConvState, ConvStats](
+        ds, watermarkDelay, gapUs, _.conv_id, _.end_us,
+        (conv, s) => foldConv(conv, s.turns, s.overflow)) {
+      (_, evs, prior) =>
+        val prev =
+          prior.getOrElse(ConvState(Seq.empty, 0L, overflow = false))
+        val merged = prev.turns ++ evs.map(e => (e.ord, e.role, e.n_chars))
+        val over = prev.overflow || merged.size > maxTurns
+        (Nil, ConvState(merged.take(maxTurns),
+          math.max(prev.end_us, evs.map(_.ts_us).max), over))
+    }
   }
 }

@@ -1082,13 +1082,19 @@ class ClassifierSpec extends AnyFunSuite {
     val holdout = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
     val (stats, model) = Classifier.naiveBayesTrain(train, "text", "source")
     val st = stats.localCheckpoint(); val mo = model.localCheckpoint()
-    def run(cap: Int) = Classifier
-      .naiveBayesScore(holdout, "doc_id", "text", st, mo,
-        broadcastModelCapRows = cap)
-      .as[(Long, String, Long)].collect().toSet
-    val fast = run(1 << 21)
-    assert(fast.nonEmpty)
-    assert(fast == run(0))
+    // a second stats table with a null-class row: the broadcast path
+    // must answer like the join chain, not throw
+    val withNullClass =
+      st.union(st.limit(1).withColumn("c", lit(null).cast("string")))
+    for (s <- Seq(st, withNullClass)) {
+      def run(cap: Int) = Classifier
+        .naiveBayesScore(holdout, "doc_id", "text", s, mo,
+          broadcastModelCapRows = cap)
+        .as[(Long, String, Long)].collect().toSet
+      val fast = run(1 << 21)
+      assert(fast.nonEmpty)
+      assert(fast == run(0))
+    }
   }
 
   test("naiveBayes: null apply-side text raises (totality is loud, " +

@@ -346,6 +346,19 @@ class DedupSpec extends AnyFunSuite {
       "d6 rewrote a matching-fingerprint cache (the skip is broken)")
   }
 
+  test("table-cache wipe deletes only d6 cluster-cache entries") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("tablecache")
+    val entry = Files.createDirectories(root.resolve("d6clusters_x/clusters"))
+    Files.write(entry.resolve("part-0"), Array[Byte](1))
+    val other = Files.write(root.resolve("notes.txt"), Array[Byte](1))
+    assert(graft.SparkEntry.clearTableCache(root.toString) == "cleared")
+    assert(!Files.exists(root.resolve("d6clusters_x")))
+    assert(Files.exists(other))
+    assert(graft.SparkEntry.clearTableCache(
+      root.resolve("nope").toString) == "absent")
+  }
+
   test("simHash is deterministic and separates similar from different") {
     val h = Dedup.simHash(docs, "doc_id", "text")
       .as[(Long, Long)].collect().toMap

@@ -413,22 +413,27 @@ class GraphSpec extends AnyFunSuite {
       (nodes(rnd.nextInt(nodes.length)), nodes(rnd.nextInt(nodes.length)),
         1L + rnd.nextInt(5))
     }.filter { case (a, b, _) => a != b }
-    val df = edges.toDF("src", "dst", "w")
+    // the same edges plus one null-dst edge, and a null seed: both
+    // paths must drop null nodes alike
+    val withNullDst = edges :+ (("p2", null: String, 2L))
     def sortedRows(d: org.apache.spark.sql.DataFrame): Seq[String] =
       d.collect().map(_.toString).sorted.toSeq
-    assert(sortedRows(Graph.pageRank(df, "src", "dst", Some("w"))) ==
-      sortedRows(Graph.pageRank(df, "src", "dst", Some("w"),
-        driverCapRows = 0)))
-    val seeds = Seq("p1", "p3", "p7").toDF("node")
-    assert(sortedRows(
-      Graph.trustRank(df, seeds, "src", "dst", "node", Some("w"))) ==
-      sortedRows(Graph.trustRank(df, seeds, "src", "dst", "node",
-        Some("w"), driverCapRows = 0)))
-    assert(sortedRows(Graph.hits(df, "src", "dst")) ==
-      sortedRows(Graph.hits(df, "src", "dst", driverCapRows = 0)))
-    assert(sortedRows(Graph.labelPropagation(df, "src", "dst")) ==
-      sortedRows(Graph.labelPropagation(df, "src", "dst",
-        driverCapRows = 0)))
+    val seeds = Seq("p1", "p3", "p7", null).toDF("node")
+    for (es <- Seq(edges, withNullDst)) {
+      val df = es.toDF("src", "dst", "w")
+      assert(sortedRows(Graph.pageRank(df, "src", "dst", Some("w"))) ==
+        sortedRows(Graph.pageRank(df, "src", "dst", Some("w"),
+          driverCapRows = 0)))
+      assert(sortedRows(
+        Graph.trustRank(df, seeds, "src", "dst", "node", Some("w"))) ==
+        sortedRows(Graph.trustRank(df, seeds, "src", "dst", "node",
+          Some("w"), driverCapRows = 0)))
+      assert(sortedRows(Graph.hits(df, "src", "dst")) ==
+        sortedRows(Graph.hits(df, "src", "dst", driverCapRows = 0)))
+      assert(sortedRows(Graph.labelPropagation(df, "src", "dst")) ==
+        sortedRows(Graph.labelPropagation(df, "src", "dst",
+          driverCapRows = 0)))
+    }
   }
   test("kCore: hand cases — triangle survives k=2, pendant peels, K4 at k=3") {
     import spark.implicits._

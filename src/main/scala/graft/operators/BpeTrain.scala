@@ -72,8 +72,7 @@ object BpeTrain {
   def learnMerges(
       docs: DataFrame, textCol: String,
       numMerges: Int, minCount: Long = 2L,
-      checkpointEvery: Int = 4,
-      driverCapRows: Int = 1 << 20): DataFrame = {
+      checkpointEvery: Int = 4): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
 
@@ -104,11 +103,10 @@ object BpeTrain {
     // Spark jobs per merge round instead of one argmax job each — with
     // bit-identical merges (pair counts are exact; the argmax tie-break
     // replays max(struct(cnt, l, r))'s UTF8 binary string order via
-    // [[Utf8Order]]). Over the cap (or cap 0, the spec's override) the
+    // [[Utf8Order]]). Over the cap (or with the twins switched off) the
     // distributed loop below runs unchanged; the probe costs one count
     // job that moves a single long.
-    if (driverCapRows > 0 &&
-        vocab.limit(driverCapRows + 1).count() <= driverCapRows) {
+    if (Guards.fitsDriver(vocab, Guards.DriverCapRows)) {
       var v = vocab.collect()
       val out = ArrayBuffer.empty[(Int, String, String, Long)]
       var rk = 1

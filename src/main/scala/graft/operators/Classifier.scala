@@ -60,8 +60,7 @@ object Classifier {
     */
   def trainSoftsign(
       df: DataFrame, featureCols: Seq[String], labelCol: String,
-      rounds: Int = 8, lr: Double = 0.5, grid: Int = 12,
-      driverCapRows: Int = 1 << 20): LinearModel = {
+      rounds: Int = 8, lr: Double = 0.5, grid: Int = 12): LinearModel = {
     require(featureCols.nonEmpty, "need at least one feature column")
     require(rounds >= 1 && rounds <= 64, s"rounds in [1, 64] (got $rounds)")
     require(grid >= 6 && grid <= 15,
@@ -84,9 +83,9 @@ object Classifier {
     // replays zExpr's left fold, p the softsign IEEE sequence, the sums
     // accumulate in BigInt (the decimal(38,0) twin), and a row with ANY
     // null field contributes nothing on either path (a null feature
-    // nulls z, hence every gradient of that row). Over the cap (or cap
-    // 0, the spec override) the aggregate loop runs unchanged.
-    if (driverCapRows > 0 && n <= driverCapRows) {
+    // nulls z, hence every gradient of that row). Over the cap (or with
+    // the twins switched off) the aggregate loop runs unchanged.
+    if (Guards.onDriver(m.sparkSession, n, Guards.DriverCapRows)) {
       val k = featureCols.size
       val rows0 = m.collect()
       val data = rows0.flatMap { r =>
@@ -583,8 +582,7 @@ object Classifier {
     */
   def naiveBayesScore(
       applyDf: DataFrame, idCol: String, textCol: String,
-      classStats: DataFrame, model: DataFrame,
-      broadcastModelCapRows: Int = 1 << 21): DataFrame = {
+      classStats: DataFrame, model: DataFrame): DataFrame = {
     import graft.functions.TextFunctions.tokens
     val checkedText =
       when(col(textCol).isNull,
@@ -601,14 +599,13 @@ object Classifier {
     // (apply-side (id,t) count, t-join, (id,c) sum, id argmax) + an
     // (id,c) join + a checkpoint with ONE id exchange. Same integers:
     // sc = prior + default·n_d + Σ_tokens adj(c, t), every term an
-    // exact long on both shapes. Over the cap (or cap 0) the join
+    // exact long on both shapes. The model cap is 2 × DriverCapRows
+    // (2²¹ rows). Over it (or with the twins switched off) the join
     // chain below runs unchanged, and so it does for class stats holding
     // a null class, prior or default, which have no pivot column or
     // exact long here.
     val broadcastStats =
-      if (broadcastModelCapRows > 0 &&
-          model.select(col("t")).limit(broadcastModelCapRows + 1).count()
-            <= broadcastModelCapRows)
+      if (Guards.fitsDriver(model.select(col("t")), 2 * Guards.DriverCapRows))
         Some(classStats.select("c", "prior_e6", "default_e6").collect())
           .filterNot(_.exists(_.anyNull))
       else None

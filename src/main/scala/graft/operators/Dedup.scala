@@ -955,8 +955,7 @@ object Dedup {
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, roundTo: Int = 3,
       bands: Int = 32, planesPerBand: Int = 8,
-      dim: Int = -1, seed: Long = 42L,
-      driverCapRows: Int = 1 << 18): DataFrame = {
+      dim: Int = -1, seed: Long = 42L): DataFrame = {
     import graft.functions.VectorFunctions._
     // Mirror the SQL registration's guard (GraftExtensions.scala): keys are
     // packed into a Long, so >64 planes would silently alias key bits.
@@ -980,8 +979,8 @@ object Dedup {
       (it == LongType || it == IntegerType) &&
         (vt == ArrayType(FloatType, true) || vt == ArrayType(FloatType, false))
     }
-    if (driverCapRows > 0 && idIntegral &&
-        df.select(col(idCol)).limit(driverCapRows + 1).count() <= driverCapRows) {
+    if (idIntegral &&
+        Guards.fitsDriver(df.select(col(idCol)), Guards.DriverCapVectors)) {
       val rows = df.select(col(idCol), col(vecCol)).collect()
       def idOf(r: org.apache.spark.sql.Row): Long = r.get(0) match {
         case l: Long => l
@@ -1240,10 +1239,10 @@ object Dedup {
     * clusters are shallow, so a handful; `maxIters` is a safety bound.
     *
     * Small-graph fast path: the edge set is already materialized (the
-    * checkpoint below), so its count is free — when it fits
-    * `smallGraphEdges` and the ids are integral, connectivity resolves as
-    * driver-side union-find in one pass instead of paying several
-    * multi-stage fixpoint rounds for a toy graph. Same bounded-driver-
+    * checkpoint below), so its size probe is cheap — when it fits
+    * [[Guards.DriverCapRows]] edges and the ids are integral, connectivity
+    * resolves as driver-side union-find in one pass instead of paying
+    * several multi-stage fixpoint rounds for a toy graph. Same bounded-driver-
     * state contract as the IVF centroids: the threshold caps memory, the
     * distributed fixpoint remains the path for web-scale edge sets, and
     * `DedupSpec` holds both paths to the same union-find oracle.
@@ -1252,8 +1251,7 @@ object Dedup {
     * appears in an edge; cluster = min id of its component.
     */
   def duplicateClusters(
-      pairs: DataFrame, maxIters: Int = 20,
-      smallGraphEdges: Long = 1L << 20): DataFrame = {
+      pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     // The (possibly expensive) pair pipeline is localCheckpoint'd ONCE —
     // eager, so it runs exactly one time; the doubled edge list and the
     // label fixpoint all derive from the materialized pair set. Checkpoint
@@ -1267,12 +1265,12 @@ object Dedup {
       case org.apache.spark.sql.types.LongType => true
       case _ => false
     })
-    if (integralIds && p0.count() <= smallGraphEdges) {
+    if (integralIds && Guards.fitsDriver(p0, Guards.DriverCapRows)) {
       val spark = p0.sparkSession
       import spark.implicits._
       // Unboxed union-find: sorted distinct ids -> dense index (binary
       // search), parent as an Int array — ~24 bytes per node instead of
-      // the ~100+ a boxed Map costs, so the smallGraphEdges cap bounds
+      // the ~100+ a boxed Map costs, so the edge cap bounds
       // real driver heap, not just entry counts. Index order equals id
       // order, so min-index union preserves "cluster = min id".
       val es = p0.as[(Long, Long)].collect()

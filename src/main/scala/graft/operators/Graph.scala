@@ -64,10 +64,9 @@ object Graph {
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String] = None, iterations: Int = 10,
-      damping: Double = 0.85, grid: Int = 12,
-      driverCapRows: Int = 1 << 20): DataFrame =
+      damping: Double = 0.85, grid: Int = 12): DataFrame =
     propagate(edges, srcCol, dstCol, weightCol, None, iterations, damping,
-      grid, op = "pageRank", driverCapRows = driverCapRows)
+      grid, op = "pageRank")
 
   /** TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004): PageRank
     * with the teleport restricted to a trusted seed set — rank flows
@@ -85,26 +84,11 @@ object Graph {
   def trustRank(
       edges: DataFrame, seeds: DataFrame, srcCol: String, dstCol: String,
       seedCol: String, weightCol: Option[String] = None,
-      iterations: Int = 10, damping: Double = 0.85, grid: Int = 12,
-      driverCapRows: Int = 1 << 20): DataFrame =
+      iterations: Int = 10, damping: Double = 0.85, grid: Int = 12)
+      : DataFrame =
     propagate(edges, srcCol, dstCol, weightCol,
       Some(seeds.select(col(seedCol).cast("string").as("node"))),
-      iterations, damping, grid, op = "trustRank",
-      driverCapRows = driverCapRows)
-
-  /** Sub-cap probe for the driver fast paths: rows reach the driver
-    * only AFTER a counted `limit(cap+1)` proves the (localCheckpointed)
-    * edge list fits, so an over-cap graph pays one count job that moves
-    * a single long — never a cap-sized (~1M-row) collect that then gets
-    * discarded. Returns None over-cap (or when the cap is disabled);
-    * the array is stable because every caller probes a checkpointed
-    * DataFrame.
-    */
-  private def subCapRows(
-      df: DataFrame, cap: Int): Option[Array[org.apache.spark.sql.Row]] =
-    if (cap <= 0) None
-    else if (df.limit(cap + 1).count() > cap) None
-    else Some(df.collect())
+      iterations, damping, grid, op = "trustRank")
 
   /** UTF8String binary order (unsigned byte-wise) — what Spark's string
     * comparisons use; the driver fast paths must tie-break identically.
@@ -120,22 +104,19 @@ object Graph {
     a.length < b.length
   }
 
-  /** Edge cap under which the fixed-round loops run driver-side — the
-    * [[graft.operators.Dedup.resolveClusters]] / bradleyTerry
-    * discipline: the per-round state is node-sized and the arithmetic
-    * an exact lattice, so a sub-cap graph iterates as plain Scala
-    * (zero Spark jobs per round instead of 2-4) with bit-identical
-    * results, spec-pinned against the distributed loop. Tests override
-    * via the operators' `driverCapRows` parameter (0 disables).
+  /** Edges in [[Guards.DriverCapRows]] or fewer make the fixed-round
+    * loops run driver-side — the [[graft.operators.Dedup.resolveClusters]]
+    * / bradleyTerry discipline: the per-round state is node-sized and
+    * the arithmetic an exact lattice, so a sub-cap graph iterates as
+    * plain Scala (zero Spark jobs per round instead of 2-4) with
+    * bit-identical results, spec-pinned against the distributed loop
+    * under [[Guards.distributedOnly]].
     */
-  private val DefaultDriverCap = 1 << 20
-
   private def propagate(
       edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String], seeds: Option[DataFrame],
       iterations: Int, damping: Double, grid: Int,
-      op: String = "pageRank", driverCapRows: Int = DefaultDriverCap)
-      : DataFrame = {
+      op: String): DataFrame = {
     require(iterations >= 1 && iterations <= 100,
       s"iterations must be in [1, 100] (got $iterations)")
     require(damping > 0.0 && damping < 1.0,
@@ -185,13 +166,13 @@ object Graph {
     // integer/set algebra, computed here from the collected rows
     // (measured: that Spark preamble was ~2.5 s of g1's 4.4 s on the
     // 10x corpus while the rank loop itself is milliseconds).
-    val rawRowsOpt = subCapRows(raw, driverCapRows)
+    val rawRowsOpt = Guards.driverRows(raw, Guards.DriverCapRows)
     val seedSetOpt: Option[Option[Set[String]]] =
       if (rawRowsOpt.isEmpty) None
       else seedNodes match {
         case None => Some(None)
         case Some(s) =>
-          subCapRows(s, driverCapRows)
+          Guards.driverRows(s, Guards.DriverCapRows)
             .map(rows => Some(rows.map(_.getString(0)).toSet))
       }
     if (rawRowsOpt.isDefined && seedSetOpt.isDefined) {
@@ -330,8 +311,7 @@ object Graph {
     */
   def hits(
       edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 8, grid: Int = 12,
-      driverCapRows: Int = 1 << 20): DataFrame = {
+      iterations: Int = 8, grid: Int = 12): DataFrame = {
     require(iterations >= 1 && iterations <= 100,
       s"iterations must be in [1, 100] (got $iterations)")
     require(grid >= 6 && grid <= 15,
@@ -351,7 +331,7 @@ object Graph {
     // runs the Spark edge-distinct/node-distinct/checkpoint preamble
     // (the propagate measurement: that preamble dwarfs the loop) —
     // the distinct edge and node sets are plain set algebra here.
-    val rawRowsOpt = subCapRows(raw, driverCapRows)
+    val rawRowsOpt = Guards.driverRows(raw, Guards.DriverCapRows)
     if (rawRowsOpt.isDefined) {
       val eSet = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
       for (r <- rawRowsOpt.get) eSet += ((r.getString(0), r.getString(1)))
@@ -514,6 +494,20 @@ object Graph {
             "div (2 * deg * (deg - 1))")))
   }
 
+  /** The simple undirected edge set (a, b) of `edges`: string node
+    * names, null endpoints and self-loops dropped, both directions of
+    * every edge, parallel edges collapsed. Callers checkpoint it.
+    */
+  private def undirected(
+      edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val raw = edges.select(
+        col(srcCol).cast("string").as("a"),
+        col(dstCol).cast("string").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull &&
+        col("a") =!= col("b"))
+    raw.unionAll(raw.select(col("b").as("a"), col("a").as("b"))).distinct()
+  }
+
   /** The shared triangle-enumeration head of [[triangles]] and
     * [[edgeSupport]]: normalized symmetric edge set, degrees, and the
     * each-triangle-once triple list (degree-ordered orientation +
@@ -522,14 +516,7 @@ object Graph {
   private def triangleTriples(
       edges: DataFrame, srcCol: String, dstCol: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val raw = edges.select(
-        col(srcCol).cast("string").as("a"),
-        col(dstCol).cast("string").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    val und = raw
-      .unionAll(raw.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .localCheckpoint()
     val deg = und.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -577,8 +564,7 @@ object Graph {
     */
   def bfsDistances(
       edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: Seq[String], maxDepth: Int = 10,
-      driverCapRows: Int = DefaultDriverCap): DataFrame = {
+      seeds: Seq[String], maxDepth: Int = 10): DataFrame = {
     require(seeds.nonEmpty && seeds.size <= 64,
       s"seeds must be 1..64 (got ${seeds.size})")
     require(seeds.distinct.size == seeds.size, "seeds must be distinct")
@@ -586,14 +572,7 @@ object Graph {
       s"maxDepth must be in [1, 64] (got $maxDepth)")
     val spark = edges.sparkSession
     import spark.implicits._
-    val raw = edges.select(
-        col(srcCol).cast("string").as("a"),
-        col(dstCol).cast("string").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    val und = raw
-      .unionAll(raw.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .localCheckpoint()
     // Sub-cap driver fast path — the [[propagate]] discipline: BFS
     // distances are exact integers and the state is the (already
@@ -604,7 +583,7 @@ object Graph {
     // first-arrival depth exactly once, and the result is compared as a
     // set. Over the cap the frontier loop below runs unchanged; the
     // probe is one count job on the checkpoint.
-    subCapRows(und, driverCapRows) match {
+    Guards.driverRows(und, Guards.DriverCapRows) match {
       case Some(rows) =>
         val adj = scala.collection.mutable.HashMap
           .empty[String, scala.collection.mutable.ArrayBuffer[String]]
@@ -725,14 +704,7 @@ object Graph {
       maxK: Int = 16): DataFrame = {
     require(maxK >= 1 && maxK <= 10000, s"maxK must be in [1,10000] (got $maxK)")
     val spark = edges.sparkSession
-    val raw = edges.select(
-        col(srcCol).cast("string").as("a"),
-        col(dstCol).cast("string").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    val und = raw
-      .unionAll(raw.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .localCheckpoint()
     val deg = und.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -786,14 +758,7 @@ object Graph {
   def avgNeighborDegree(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val raw = edges.select(
-        col(srcCol).cast("string").as("a"),
-        col(dstCol).cast("string").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    val und = raw
-      .unionAll(raw.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .localCheckpoint()
     val deg = und.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -877,14 +842,7 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String,
       dMin: Int = 2): DataFrame = {
     require(dMin >= 1, s"dMin must be >= 1 (got $dMin)")
-    val raw = edges.select(
-        col(srcCol).cast("string").as("a"),
-        col(dstCol).cast("string").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    val und = raw
-      .unionAll(raw.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val deg = und.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("d"))
     val lnTerm = floor(
@@ -935,7 +893,7 @@ object Graph {
     */
   def labelPropagation(
       edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 4, driverCapRows: Int = 1 << 20): DataFrame = {
+      iterations: Int = 4): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50] (got $iterations)")
     val und = edges.select(
@@ -949,7 +907,7 @@ object Graph {
     // names and the per-round vote is (max count, min label) with ties
     // broken in UTF8String BINARY order — utf8Less mirrors Spark's
     // string comparison so the tie-break is bit-identical, spec-pinned.
-    val eRowsOpt = subCapRows(e, driverCapRows)
+    val eRowsOpt = Guards.driverRows(e, Guards.DriverCapRows)
     if (eRowsOpt.isDefined) {
       val eRows = eRowsOpt.get
       val m = eRows.length
@@ -1137,14 +1095,7 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String,
       maxDeg: Int = 64): DataFrame = {
     require(maxDeg >= 2, s"maxDeg must be >= 2 (got $maxDeg)")
-    val raw = edges.select(
-        col(srcCol).cast("string").as("a"),
-        col(dstCol).cast("string").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    val und = raw
-      .unionAll(raw.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .localCheckpoint() // feeds degree, the wedge index and the flag
     val deg = und.groupBy("a").agg(count(lit(1)).as("deg"))
     val mid = und
@@ -1190,20 +1141,13 @@ object Graph {
     */
   def kCore(
       edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      rounds: Int = 10, driverCapRows: Int = 1 << 20): DataFrame = {
+      rounds: Int = 10): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(rounds >= 1 && rounds <= 50,
       s"rounds must be in [1, 50] (got $rounds)")
-    val raw = edges.select(
-        col(srcCol).cast("string").as("a"),
-        col(dstCol).cast("string").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    val und = raw
-      .unionAll(raw.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .localCheckpoint()
-    val eRowsOpt = subCapRows(und, driverCapRows)
+    val eRowsOpt = Guards.driverRows(und, Guards.DriverCapRows)
     if (eRowsOpt.isDefined) {
       val eRows = eRowsOpt.get
       val names = eRows.map(_.getString(0)).distinct.toArray
@@ -1311,14 +1255,7 @@ object Graph {
   def assortativity(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val raw = edges.select(
-        col(srcCol).cast("string").as("a"),
-        col(dstCol).cast("string").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull &&
-        col("a") =!= col("b"))
-    val und = raw
-      .unionAll(raw.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
       .localCheckpoint()
     val deg = und.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("deg"))

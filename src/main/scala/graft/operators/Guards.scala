@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Loud-raise guards for data-derived `explode(sequence(lo, hi))`
@@ -29,6 +29,9 @@ import org.apache.spark.sql.functions._
   * `count()` — Catalyst's join elimination can satisfy a count from
   * the preserved side alone and skip the guarded subtree entirely, so
   * the raise never evaluates and the probe reads as "guard missing".
+  *
+  * Also the one gate of the sub-cap driver twins: the session switch
+  * [[DriverPathsKey]], the two row caps and the only size probe.
   */
 object Guards {
 
@@ -75,6 +78,62 @@ object Guards {
       }
       threads.foreach(_.join())
       if (firstErr.get() != null) throw firstErr.get()
+    }
+  }
+
+  /** Session switch for every sub-cap driver twin: an operator whose
+    * input fits its cap may run a plain-Scala loop on the driver,
+    * bit-identical to its distributed Catalyst chain (each twin is
+    * spec-pinned against that chain). `false` forces the distributed
+    * chain everywhere — the A/B and parity lever; it reaches the
+    * session as `-Dspark.graft.driverPaths=false` too (a `spark.*`
+    * system property lands in the SparkConf).
+    */
+  val DriverPathsKey = "spark.graft.driverPaths"
+
+  /** Row cap of the graph, merge-loop, rating and linear-model twins:
+    * the driver-side state is row- or node-sized arrays of longs.
+    */
+  val DriverCapRows: Int = 1 << 20
+
+  /** Row cap of the vector twins (k-means/PQ, LSH, MMR): each row holds
+    * a float vector, so the cap is a quarter of [[DriverCapRows]].
+    */
+  val DriverCapVectors: Int = 1 << 18
+
+  def driverPaths(spark: SparkSession): Boolean =
+    spark.conf.get(DriverPathsKey, "true").toBoolean
+
+  /** The gate for a site that already holds the exact row count `n` of
+    * the frame its twin would collect — no job.
+    */
+  def onDriver(spark: SparkSession, n: Long, cap: Int): Boolean =
+    driverPaths(spark) && n <= cap
+
+  /** The sub-cap probe: a counted `limit(cap + 1)` proves `ds` fits
+    * before any row moves, so an over-cap input pays one count job that
+    * returns a single long, never a cap-sized collect it then discards.
+    * No job at all when the switch is off.
+    */
+  def fitsDriver(ds: Dataset[_], cap: Int): Boolean =
+    driverPaths(ds.sparkSession) && ds.limit(cap + 1).count() <= cap
+
+  /** [[fitsDriver]], then the rows. Probe a checkpointed (or otherwise
+    * stable) frame: the count and the collect must see the same rows.
+    */
+  def driverRows(df: DataFrame, cap: Int): Option[Array[Row]] =
+    if (fitsDriver(df, cap)) Some(df.collect()) else None
+
+  /** Run `body` with the driver twins switched off, then restore the
+    * switch's previous setting (or its default).
+    */
+  def distributedOnly[T](spark: SparkSession)(body: => T): T = {
+    val prev = spark.conf.getOption(DriverPathsKey)
+    spark.conf.set(DriverPathsKey, "false")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(DriverPathsKey, v)
+      case None => spark.conf.unset(DriverPathsKey)
     }
   }
 

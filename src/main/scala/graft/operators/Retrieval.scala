@@ -456,8 +456,8 @@ object Retrieval {
     *
     * Scale: the games collapse to one symmetric (i, j, n) pair table
     * (checkpointed once, distributed). The pair table is players²-
-    * bounded, so when its doubled form fits under `driverCapRows`
-    * (default 2²⁰) the MM rounds run driver-side on the same exact
+    * bounded, so when its doubled form fits under
+    * [[Guards.DriverCapRows]] (2²⁰) the MM rounds run driver-side on the same exact
     * lattice — zero Spark jobs per round instead of ~4 (the
     * resolveClusters union-find discipline; both paths agree bit for
     * bit, spec-pinned). Beyond the cap, each round is two joins of the
@@ -470,7 +470,7 @@ object Retrieval {
     */
   def bradleyTerry(
       games: DataFrame, winnerCol: String, loserCol: String,
-      iterations: Int = 8, driverCapRows: Int = 1 << 20): DataFrame = {
+      iterations: Int = 8): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50] (got $iterations)")
     val scale = 1e6
@@ -506,14 +506,7 @@ object Retrieval {
     // integer sums (BigInt ≡ decimal(38,0), both order-free), identical
     // IEEE double ops — instead of ~4 Spark jobs per round. Beyond the
     // cap the distributed loop below is the plan, unchanged.
-    // Sub-cap probe: a counted limit proves the (checkpointed) pair
-    // table fits BEFORE any row moves to the driver — an over-cap run
-    // pays one count job, never a cap-sized collect it then discards.
-    val capRows = driverCapRows
-    val bothRowsOpt =
-      if (capRows > 0 && both.limit(capRows + 1).count() <= capRows)
-        Some(both.collect())
-      else None
+    val bothRowsOpt = Guards.driverRows(both, Guards.DriverCapRows)
     if (bothRowsOpt.isDefined) {
       val bothRows = bothRowsOpt.get
       val baseRows = base.collect()

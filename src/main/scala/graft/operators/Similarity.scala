@@ -233,8 +233,7 @@ object Similarity {
   def mmrRerank(
       candidates: DataFrame, qIdCol: String, cIdCol: String,
       relE3Col: String, vectors: DataFrame, vIdCol: String,
-      vecCol: String, k: Int, lambdaPct: Int,
-      driverCapRows: Int = 1 << 18): DataFrame = {
+      vecCol: String, k: Int, lambdaPct: Int): DataFrame = {
     require(k >= 1 && k <= 100, s"k must be in [1, 100] (got $k)")
     require(lambdaPct >= 0 && lambdaPct <= 100,
       s"lambdaPct must be in [0, 100] (got $lambdaPct)")
@@ -262,86 +261,82 @@ object Similarity {
         (vt == ArrayType(FloatType, containsNull = true) ||
           vt == ArrayType(FloatType, containsNull = false))
     }
-    var candsEff = cands
-    if (driverCapRows > 0 && integralIds) {
-      val candsCk = cands.localCheckpoint()
-      candsEff = candsCk
-      if (candsCk.limit(driverCapRows + 1).count() <= driverCapRows) {
-        def idOf(r: org.apache.spark.sql.Row, i: Int): Long = r.get(i) match {
-          case l: Long => l
-          case n: Int => n.toLong
-        }
-        val cRows = candsCk.collect().map(r => (idOf(r, 0), idOf(r, 1), r.getLong(2)))
-        val vRows = vectors
-          .select(col(vIdCol).as("id"), col(vecCol).as("v"))
-          .join(candsCk.select(col("c_id")).distinct(),
-            col("id") === col("c_id"), "left_semi")
-          .collect()
-        val vecs = scala.collection.mutable.HashMap.empty[Long, Array[Float]]
-        val norms = scala.collection.mutable.HashMap.empty[Long, Double]
-        for (r <- vRows) {
-          val id = idOf(r, 0)
-          val v: Array[Float] =
-            if (r.isNullAt(1)) null
-            else r.getSeq[Float](1).toArray
-          val n =
-            if (v == null) Double.NaN
-            else {
-              var s = 0.0; var i = 0
-              while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-              math.sqrt(s)
-            }
-          if (n.isNaN || n == 0.0)
-            throw new RuntimeException(
-              s"mmrRerank: zero/null-norm vector for id $id")
-          vecs(id) = v; norms(id) = n
-        }
-        def simE3(a: Long, b: Long): Long = {
-          val x = vecs(a); val y = vecs(b)
-          val m = math.min(x.length, y.length)
-          var s = 0.0; var i = 0
-          while (i < m) { s += x(i).toDouble * y(i).toDouble; i += 1 }
-          math.floor(s / (norms(a) * norms(b)) * 1000 + 0.5).toLong
-        }
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-        for ((q, group0) <- cRows.filter(c => vecs.contains(c._2)).groupBy(_._1)) {
-          val group = group0.map(c => (c._2, c._3)) // (c_id, rel)
-          val selected = scala.collection.mutable.ArrayBuffer.empty[Long]
-          var round = 1
-          // Gate on remaining.nonEmpty, not selected.size < group.length:
-          // duplicate (q_id, c_id) candidate rows inflate group.length, and
-          // once every DISTINCT id is picked the distributed anti-join loop
-          // just stops emitting — minBy on an empty remaining would throw.
-          var remaining = group
-          while (round <= k && remaining.nonEmpty) {
-            val pick =
-              if (round == 1) remaining.minBy { case (cid, rel) => (-rel, cid) }
-              else remaining.minBy { case (cid, rel) =>
-                val ms = selected.map(o => simE3(cid, o)).max
-                (-(lambdaPct.toLong * rel - (100 - lambdaPct).toLong * ms), cid)
-              }
-            selected += pick._1
-            out += ((q, pick._1, round))
-            remaining = remaining.filterNot(_._1 == pick._1)
-            round += 1
-          }
-        }
-        val spark0 = candidates.sparkSession
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          StructField("q_id", candsCk.schema("q_id").dataType),
-          StructField("c_id", candsCk.schema("c_id").dataType),
-          StructField("mmr_round", IntegerType, nullable = false)))
-        def backId(dt: DataType, v: Long): Any =
-          if (dt == LongType) v else v.toInt
-        val rows = out.toSeq.map { case (q, c, r) =>
-          org.apache.spark.sql.Row(
-            backId(schema(0).dataType, q), backId(schema(1).dataType, c), r)
-        }
-        return spark0.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
+    val candsEff = if (integralIds) cands.localCheckpoint() else cands
+    if (integralIds && Guards.fitsDriver(candsEff, Guards.DriverCapVectors)) {
+      def idOf(r: org.apache.spark.sql.Row, i: Int): Long = r.get(i) match {
+        case l: Long => l
+        case n: Int => n.toLong
       }
+      val cRows = candsEff.collect().map(r => (idOf(r, 0), idOf(r, 1), r.getLong(2)))
+      val vRows = vectors
+        .select(col(vIdCol).as("id"), col(vecCol).as("v"))
+        .join(candsEff.select(col("c_id")).distinct(),
+          col("id") === col("c_id"), "left_semi")
+        .collect()
+      val vecs = scala.collection.mutable.HashMap.empty[Long, Array[Float]]
+      val norms = scala.collection.mutable.HashMap.empty[Long, Double]
+      for (r <- vRows) {
+        val id = idOf(r, 0)
+        val v: Array[Float] =
+          if (r.isNullAt(1)) null
+          else r.getSeq[Float](1).toArray
+        val n =
+          if (v == null) Double.NaN
+          else {
+            var s = 0.0; var i = 0
+            while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
+            math.sqrt(s)
+          }
+        if (n.isNaN || n == 0.0)
+          throw new RuntimeException(
+            s"mmrRerank: zero/null-norm vector for id $id")
+        vecs(id) = v; norms(id) = n
+      }
+      def simE3(a: Long, b: Long): Long = {
+        val x = vecs(a); val y = vecs(b)
+        val m = math.min(x.length, y.length)
+        var s = 0.0; var i = 0
+        while (i < m) { s += x(i).toDouble * y(i).toDouble; i += 1 }
+        math.floor(s / (norms(a) * norms(b)) * 1000 + 0.5).toLong
+      }
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
+      for ((q, group0) <- cRows.filter(c => vecs.contains(c._2)).groupBy(_._1)) {
+        val group = group0.map(c => (c._2, c._3)) // (c_id, rel)
+        val selected = scala.collection.mutable.ArrayBuffer.empty[Long]
+        var round = 1
+        // Gate on remaining.nonEmpty, not selected.size < group.length:
+        // duplicate (q_id, c_id) candidate rows inflate group.length, and
+        // once every DISTINCT id is picked the distributed anti-join loop
+        // just stops emitting — minBy on an empty remaining would throw.
+        var remaining = group
+        while (round <= k && remaining.nonEmpty) {
+          val pick =
+            if (round == 1) remaining.minBy { case (cid, rel) => (-rel, cid) }
+            else remaining.minBy { case (cid, rel) =>
+              val ms = selected.map(o => simE3(cid, o)).max
+              (-(lambdaPct.toLong * rel - (100 - lambdaPct).toLong * ms), cid)
+            }
+          selected += pick._1
+          out += ((q, pick._1, round))
+          remaining = remaining.filterNot(_._1 == pick._1)
+          round += 1
+        }
+      }
+      val spark0 = candidates.sparkSession
+      import org.apache.spark.sql.types._
+      val schema = StructType(Seq(
+        StructField("q_id", candsEff.schema("q_id").dataType),
+        StructField("c_id", candsEff.schema("c_id").dataType),
+        StructField("mmr_round", IntegerType, nullable = false)))
+      def backId(dt: DataType, v: Long): Any =
+        if (dt == LongType) v else v.toInt
+      val rows = out.toSeq.map { case (q, c, r) =>
+        org.apache.spark.sql.Row(
+          backId(schema(0).dataType, q), backId(schema(1).dataType, c), r)
+      }
+      return spark0.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](
+          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
     }
     // Same zero-norm contract as marginMining: a zero/null-norm vector
     // would NaN→NULL the pairwise sim and silently skew the
@@ -790,7 +785,7 @@ object Similarity {
   def ivfTrain(
       df: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, iters: Int = 3, seed: Long = 42L,
-      portable: Boolean = false, driverCapRows: Int = 1 << 18): IvfModel = {
+      portable: Boolean = false): IvfModel = {
     val spark = df.sparkSession
     import spark.implicits._
     // Deterministic seeded init without a corpus-wide ordering: a hash
@@ -814,8 +809,9 @@ object Similarity {
     // [[gridMean]] lattice, so a sub-cap corpus runs the iterations in
     // plain Scala (zero Spark jobs per round instead of one
     // assignment+mean aggregate each) with bit-identical centroids.
-    // Over the cap (or cap 0) the distributed loop runs unchanged.
-    if (driverCapRows > 0 && n <= driverCapRows) {
+    // Over the cap (or with the twins switched off) the distributed loop
+    // runs unchanged.
+    if (Guards.onDriver(spark, n, Guards.DriverCapVectors)) {
       val vecs = df.select(col(vecCol)).collect()
         .flatMap(r => if (r.isNullAt(0)) None
           else Some(r.getSeq[Float](0).toArray))
@@ -982,7 +978,7 @@ object Similarity {
   def pqTrain(
       df: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, ksub: Int = 16, iters: Int = 3, seed: Long = 42L,
-      portable: Boolean = false, driverCapRows: Int = 1 << 18): PqModel = {
+      portable: Boolean = false): PqModel = {
     val spark = df.sparkSession
     import spark.implicits._
     val dim = df.select(size(col(vecCol))).head.getInt(0)
@@ -1005,9 +1001,9 @@ object Similarity {
     // Sub-cap driver fast path — same contract as [[ivfTrain]]'s: the
     // per-subspace assignment replays [[assignSubDriver]] and the means
     // the exact gridMean lattice, so the rounds run driver-side with
-    // bit-identical codebooks; cap 0 / over-cap takes the distributed
-    // loop unchanged.
-    if (driverCapRows > 0 && n <= driverCapRows) {
+    // bit-identical codebooks; over the cap (or with the twins switched
+    // off) the distributed loop runs unchanged.
+    if (Guards.onDriver(spark, n, Guards.DriverCapVectors)) {
       val vecs = df.select(col(vecCol)).collect()
         .flatMap(r => if (r.isNullAt(0)) None
           else Some(r.getSeq[Float](0).toArray))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
-import graft.operators.{Classifier, Decontamination, Dedup, EventAnalytics, Graph, IntervalDepth, Pca, Profiling, Sampling, Similarity, TextAnalytics}
+import graft.operators.{Classifier, Decontamination, Dedup, EventAnalytics, Graph, Guards, IntervalDepth, Pca, Profiling, Sampling, Similarity, TextAnalytics}
 
 /** Scaling probe for the dedup/text AND vector families: synthesizes
   * corpora at 1×, 4× and 16× the bench document count (deterministic
@@ -850,7 +850,7 @@ object ScaleProbe {
               .as("item")),
           "k", "item").count()
       },
-      // driverCapRows = 0: probe the DISTRIBUTED peel (the at-scale
+      // driver twins off: probe the DISTRIBUTED peel (the at-scale
       // path); the driver fast path is O(edges·rounds) trivially
       "g8_kcore" -> { d =>
         val ids = d.select(col("doc_id"))
@@ -860,8 +860,9 @@ object ScaleProbe {
             (col("doc_id") + 2).as("dst")))
           .join(ids.select(col("doc_id").as("dst")), Seq("dst"),
             "left_semi")
-        Graph.kCore(hop, "src", "dst", k = 3, rounds = 10,
-          driverCapRows = 0).count()
+        Guards.distributedOnly(d.sparkSession) {
+          Graph.kCore(hop, "src", "dst", k = 3, rounds = 10).count()
+        }
       },
       "m8_png_meta" -> { d =>
         val spark2 = d.sparkSession

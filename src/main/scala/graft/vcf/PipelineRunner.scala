@@ -52,7 +52,7 @@ object PipelineRunner {
         m.get("--gvcf").map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
           ++ fromSheet)
     base.copy(
-      chrom = m.get("--chrom").map(_.toInt).getOrElse(base.chrom),
+      chrom = m.get("--chrom").map(VcfFunctions.chromToInt).getOrElse(base.chrom),
       binWidth = m.get("--bin-width").map(_.toDouble).getOrElse(base.binWidth),
       stages = m.get("--stages")
         .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(base.stages))
@@ -67,19 +67,27 @@ object PipelineRunner {
       .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
   }
 
+  /** The stage names, in the order [[run]] runs them. */
+  val Stages: Seq[String] = Seq("parse", "group", "effects", "variants", "publish")
+
   case class Config(
       root: String,
       gvcfPaths: Seq[String] = Nil,
       chrom: Int = 1,
       binWidth: Double = 1e6,
-      stages: Seq[String] = Seq("parse", "group", "effects", "variants", "publish"))
+      stages: Seq[String] = Stages)
 
   private def path(c: Config, table: String) = s"${c.root}/$table"
 
   /** Run the configured stages in order. Each stage is independently
-    * restartable — state lives only in the stage tables.
+    * restartable — state lives only in the stage tables. An unknown
+    * stage name fails before any stage runs: skipping it would leave the
+    * next stage reading a stale table from an earlier run.
     */
   def run(spark: SparkSession, c: Config): Unit = {
+    val unknown = c.stages.filterNot(Stages.contains)
+    require(unknown.isEmpty,
+      s"unknown stages: ${unknown.mkString(", ")} (known: ${Stages.mkString(", ")})")
     if (c.stages.contains("parse")) {
       val parsed = VcfPipeline.qualityGate(
         VcfPipeline.ingest(spark, c.gvcfPaths, c.chrom))

@@ -83,9 +83,10 @@ class BpeTrainSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet")
     val fast = BpeTrain.learnMerges(docs, "text", numMerges = 12)
       .as[(Int, String, String, Long)].collect().sortBy(_._1).toSeq
-    val dist = BpeTrain.learnMerges(docs, "text", numMerges = 12,
-        driverCapRows = 0)
-      .as[(Int, String, String, Long)].collect().sortBy(_._1).toSeq
+    val dist = TestSpark.distributed {
+      BpeTrain.learnMerges(docs, "text", numMerges = 12)
+        .as[(Int, String, String, Long)].collect().sortBy(_._1).toSeq
+    }
     assert(fast == dist)
   }
 

@@ -68,8 +68,9 @@ class ClassifierSpec extends AnyFunSuite {
         ((Some(1.0), Option.empty[Double], Some(0.5))))
       .toDF("y", "x1", "x2")
     val fast = Classifier.trainSoftsign(df, Seq("x1", "x2"), "y", rounds = 16)
-    val dist = Classifier.trainSoftsign(df, Seq("x1", "x2"), "y", rounds = 16,
-      driverCapRows = 0)
+    val dist = TestSpark.distributed {
+      Classifier.trainSoftsign(df, Seq("x1", "x2"), "y", rounds = 16)
+    }
     assert(fast.bias == dist.bias)
     assert(fast.weights.toSeq == dist.weights.toSeq)
   }
@@ -87,8 +88,9 @@ class ClassifierSpec extends AnyFunSuite {
       .toDF("y", "x1", "x2")
     val fast = Classifier.trainSoftsign(df, Seq("x1", "x2"), "y",
       rounds = 8, grid = 15)
-    val dist = Classifier.trainSoftsign(df, Seq("x1", "x2"), "y",
-      rounds = 8, grid = 15, driverCapRows = 0)
+    val dist = TestSpark.distributed {
+      Classifier.trainSoftsign(df, Seq("x1", "x2"), "y", rounds = 8, grid = 15)
+    }
     assert(fast.bias == dist.bias)
     assert(fast.weights.toSeq == dist.weights.toSeq)
   }
@@ -1087,13 +1089,12 @@ class ClassifierSpec extends AnyFunSuite {
     val withNullClass =
       st.union(st.limit(1).withColumn("c", lit(null).cast("string")))
     for (s <- Seq(st, withNullClass)) {
-      def run(cap: Int) = Classifier
-        .naiveBayesScore(holdout, "doc_id", "text", s, mo,
-          broadcastModelCapRows = cap)
+      def run() = Classifier
+        .naiveBayesScore(holdout, "doc_id", "text", s, mo)
         .as[(Long, String, Long)].collect().toSet
-      val fast = run(1 << 21)
+      val fast = run()
       assert(fast.nonEmpty)
-      assert(fast == run(0))
+      assert(fast == TestSpark.distributed(run()))
     }
   }
 

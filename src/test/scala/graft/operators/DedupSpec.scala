@@ -160,13 +160,12 @@ class DedupSpec extends AnyFunSuite {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(exact.size >= 50) // every planted copy pairs with its original
     assert(blocked == exact)
-    // driver fast path ≡ distributed band-join chain (cap 0), including
-    // the rounded sims, not just the pair set
-    val fast = Dedup.embeddingNearDupPairs(corpus, "vec_id", "embedding", 0.85)
+    // driver fast path ≡ distributed band-join chain, including the
+    // rounded sims, not just the pair set
+    def run() = Dedup.embeddingNearDupPairs(corpus, "vec_id", "embedding", 0.85)
       .as[(Long, Long, Double)].collect().toSet
-    val dist = Dedup.embeddingNearDupPairs(corpus, "vec_id", "embedding", 0.85,
-        driverCapRows = 0)
-      .as[(Long, Long, Double)].collect().toSet
+    val fast = run()
+    val dist = TestSpark.distributed(run())
     assert(fast == dist)
   }
 
@@ -181,12 +180,12 @@ class DedupSpec extends AnyFunSuite {
       (1L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
       (1L, Array(1.0f, 0.0f, 0.0f, 0.0f)), // duplicated id
       (2L, Array(0.9f, 0.1f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    def run(cap: Int) = Dedup.embeddingNearDupPairs(
-        corpus, "vec_id", "embedding", 0.85, driverCapRows = cap)
+    def run() = Dedup.embeddingNearDupPairs(
+        corpus, "vec_id", "embedding", 0.85)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSeq.sorted
-    val got = run(1 << 18)
+    val got = run()
     assert(got == Seq((1L, 2L), (1L, 2L)), got.toString)
-    assert(got == run(0))
+    assert(got == TestSpark.distributed(run()))
   }
 
   test("embeddingNearDupPairs fails loudly on zero-norm pairs on both paths") {
@@ -201,12 +200,12 @@ class DedupSpec extends AnyFunSuite {
       (2L, Array(0.0f, 0.0f, 0.0f, 0.0f)),
       (3L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
       (4L, Array(0.9f, 0.1f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    def run(cap: Int) =
-      Dedup.embeddingNearDupPairs(corpus, "vec_id", "embedding", 0.85,
-        driverCapRows = cap).collect()
-    val eFast = intercept[Exception] { run(1 << 18) }
+    def run() =
+      Dedup.embeddingNearDupPairs(corpus, "vec_id", "embedding", 0.85)
+        .collect()
+    val eFast = intercept[Exception] { run() }
     assert(eFast.getMessage.contains("DIVIDE_BY_ZERO"), eFast.getMessage)
-    val eDist = intercept[Exception] { run(0) }
+    val eDist = intercept[Exception] { TestSpark.distributed(run()) }
     assert(eDist.getMessage.contains("DIVIDE_BY_ZERO"), eDist.getMessage)
   }
 
@@ -275,10 +274,11 @@ class DedupSpec extends AnyFunSuite {
       .map(x => x -> find(x)).toMap
     val got = Dedup.duplicateClusters(pairs).as[(Long, Long)].collect().toMap
     assert(got == want)
-    // force the distributed fixpoint (threshold 0) — must agree with the
-    // driver union-find fast path
-    val distributed = Dedup.duplicateClusters(pairs, smallGraphEdges = 0L)
-      .as[(Long, Long)].collect().toMap
+    // force the distributed fixpoint — must agree with the driver
+    // union-find fast path
+    val distributed = TestSpark.distributed {
+      Dedup.duplicateClusters(pairs).as[(Long, Long)].collect().toMap
+    }
     assert(distributed == want)
   }
 

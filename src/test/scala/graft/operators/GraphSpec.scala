@@ -421,18 +421,12 @@ class GraphSpec extends AnyFunSuite {
     val seeds = Seq("p1", "p3", "p7", null).toDF("node")
     for (es <- Seq(edges, withNullDst)) {
       val df = es.toDF("src", "dst", "w")
-      assert(sortedRows(Graph.pageRank(df, "src", "dst", Some("w"))) ==
-        sortedRows(Graph.pageRank(df, "src", "dst", Some("w"),
-          driverCapRows = 0)))
-      assert(sortedRows(
-        Graph.trustRank(df, seeds, "src", "dst", "node", Some("w"))) ==
-        sortedRows(Graph.trustRank(df, seeds, "src", "dst", "node",
-          Some("w"), driverCapRows = 0)))
-      assert(sortedRows(Graph.hits(df, "src", "dst")) ==
-        sortedRows(Graph.hits(df, "src", "dst", driverCapRows = 0)))
-      assert(sortedRows(Graph.labelPropagation(df, "src", "dst")) ==
-        sortedRows(Graph.labelPropagation(df, "src", "dst",
-          driverCapRows = 0)))
+      def bothPaths(run: => org.apache.spark.sql.DataFrame): Unit =
+        assert(sortedRows(run) == TestSpark.distributed(sortedRows(run)))
+      bothPaths(Graph.pageRank(df, "src", "dst", Some("w")))
+      bothPaths(Graph.trustRank(df, seeds, "src", "dst", "node", Some("w")))
+      bothPaths(Graph.hits(df, "src", "dst"))
+      bothPaths(Graph.labelPropagation(df, "src", "dst"))
     }
   }
   test("kCore: hand cases — triangle survives k=2, pendant peels, K4 at k=3") {
@@ -473,9 +467,10 @@ class GraphSpec extends AnyFunSuite {
       .groupBy(_._1).view.mapValues(_.size.toLong).toMap
     assert(got == want)
     // bit-for-bit parity with the distributed loop
-    val dist = Graph.kCore(df, "src", "dst", k = 3, rounds = 10,
-        driverCapRows = 0)
-      .as[(String, Long)].collect().toMap
+    val dist = TestSpark.distributed {
+      Graph.kCore(df, "src", "dst", k = 3, rounds = 10)
+        .as[(String, Long)].collect().toMap
+    }
     assert(got == dist)
   }
   test("cooccurrence: hand pairs, dedup, loud hub-key cap, null raise") {
@@ -864,11 +859,13 @@ class GraphSpec extends AnyFunSuite {
       dist.map { case (node, dd) => (s, node) -> dd }
     }.toMap
     assert(got == want)
-    // driver fast path (default cap) ≡ distributed frontier loop (cap 0)
-    val dist0 = Graph.bfsDistances(edges.toDF("s", "t"), "s", "t",
-        seeds, maxDepth = cap, driverCapRows = 0)
-      .as[(String, String, Int)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
+    // driver fast path ≡ distributed frontier loop
+    val dist0 = TestSpark.distributed {
+      Graph.bfsDistances(edges.toDF("s", "t"), "s", "t",
+          seeds, maxDepth = cap)
+        .as[(String, String, Int)].collect()
+        .map(r => (r._1, r._2) -> r._3).toMap
+    }
     assert(dist0 == got)
   }
 }

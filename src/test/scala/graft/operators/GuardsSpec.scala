@@ -98,4 +98,14 @@ class GuardsSpec extends AnyFunSuite {
     // covered; w1 sees one interval, 5 bases covered
     assert(got == Set(("c1", 0L, 9L, 2L, 10L), ("c1", 10L, 14L, 1L, 5L)))
   }
+
+  test("driverRows: the rows at cap, None over cap or with the switch off") {
+    val df = Seq(1L, 2L, 3L).toDF("x")
+    assert(Guards.driverRows(df, 3).map(_.map(_.getLong(0)).toSeq.sorted)
+      .contains(Seq(1L, 2L, 3L)))
+    assert(Guards.driverRows(df, 2).isEmpty)
+    assert(TestSpark.distributed(Guards.driverRows(df, 3)).isEmpty)
+    assert(spark.conf.getOption(Guards.DriverPathsKey).isEmpty)
+    assert(Guards.driverPaths(spark))
+  }
 }

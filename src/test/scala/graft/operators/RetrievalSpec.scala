@@ -518,9 +518,10 @@ class RetrievalSpec extends AnyFunSuite {
     }
     val fast = Retrieval.bradleyTerry(games.toDF("w", "l"), "w", "l")
       .as[(String, Long, Double)].collect().sorted.toSeq
-    val dist = Retrieval.bradleyTerry(games.toDF("w", "l"), "w", "l",
-        driverCapRows = 0) // force the distributed loop
-      .as[(String, Long, Double)].collect().sorted.toSeq
+    val dist = TestSpark.distributed {
+      Retrieval.bradleyTerry(games.toDF("w", "l"), "w", "l")
+        .as[(String, Long, Double)].collect().sorted.toSeq
+    }
     assert(fast == dist)
   }
 

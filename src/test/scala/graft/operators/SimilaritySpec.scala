@@ -495,13 +495,15 @@ class SimilaritySpec extends AnyFunSuite {
       .select("vec_id", "embedding")
     val i1 = Similarity.ivfTrain(emb, "vec_id", "embedding",
       nlist = 8, iters = 3)
-    val i0 = Similarity.ivfTrain(emb, "vec_id", "embedding",
-      nlist = 8, iters = 3, driverCapRows = 0)
+    val i0 = TestSpark.distributed {
+      Similarity.ivfTrain(emb, "vec_id", "embedding", nlist = 8, iters = 3)
+    }
     assert(i1.centroids == i0.centroids)
     val p1 = Similarity.pqTrain(emb, "vec_id", "embedding",
       m = 8, ksub = 16, iters = 2)
-    val p0 = Similarity.pqTrain(emb, "vec_id", "embedding",
-      m = 8, ksub = 16, iters = 2, driverCapRows = 0)
+    val p0 = TestSpark.distributed {
+      Similarity.pqTrain(emb, "vec_id", "embedding", m = 8, ksub = 16, iters = 2)
+    }
     assert(p1.subCentroids == p0.subCentroids)
   }
 
@@ -514,11 +516,10 @@ class SimilaritySpec extends AnyFunSuite {
         "vec_id", "vec_id", "embedding", k = 8)
       .select($"q_id", $"c_id",
         floor($"sim" * 1000 + lit(0.5)).cast("long").as("rel_e3"))
-    def run(cap: Int) = Similarity.mmrRerank(cands, "q_id", "c_id",
-        "rel_e3", emb, "vec_id", "embedding", k = 4, lambdaPct = 70,
-        driverCapRows = cap)
+    def run() = Similarity.mmrRerank(cands, "q_id", "c_id",
+        "rel_e3", emb, "vec_id", "embedding", k = 4, lambdaPct = 70)
       .as[(Long, Long, Int)].collect().sorted.toSeq
-    assert(run(1 << 18) == run(0))
+    assert(run() == TestSpark.distributed(run()))
   }
 
   test("mmrRerank tolerates duplicate (q_id, c_id) candidate rows") {
@@ -531,13 +532,12 @@ class SimilaritySpec extends AnyFunSuite {
       (102L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
     val cands = Seq((1L, 101L, 900L), (1L, 101L, 900L), (1L, 102L, 500L))
       .toDF("q_id", "c_id", "rel_e3")
-    def run(cap: Int) = Similarity.mmrRerank(cands, "q_id", "c_id", "rel_e3",
-        vectors, "vec_id", "embedding", k = 3, lambdaPct = 70,
-        driverCapRows = cap)
+    def run() = Similarity.mmrRerank(cands, "q_id", "c_id", "rel_e3",
+        vectors, "vec_id", "embedding", k = 3, lambdaPct = 70)
       .as[(Long, Long, Int)].collect().sorted.toSeq
-    val fast = run(1 << 18)
+    val fast = run()
     assert(fast == Seq((1L, 101L, 1), (1L, 102L, 2)))
-    assert(fast == run(0))
+    assert(fast == TestSpark.distributed(run()))
   }
 
   test("ivfTrain fails loudly on ragged vectors on both paths") {
@@ -549,11 +549,13 @@ class SimilaritySpec extends AnyFunSuite {
       (1L, Array(1.0f)),
       (2L, Array(0.5f, 2.0f)),
       (3L, Array(0.1f, 0.2f, 0.3f))).toDF("vec_id", "embedding")
-    def run(cap: Int) = Similarity.ivfTrain(ragged, "vec_id", "embedding",
-      nlist = 2, iters = 2, driverCapRows = cap)
-    val eFast = intercept[IllegalArgumentException] { run(1 << 18) }
+    def run() = Similarity.ivfTrain(ragged, "vec_id", "embedding",
+      nlist = 2, iters = 2)
+    val eFast = intercept[IllegalArgumentException] { run() }
     assert(eFast.getMessage.contains("uniform"))
-    val eDist = intercept[IllegalArgumentException] { run(0) }
+    val eDist = intercept[IllegalArgumentException] {
+      TestSpark.distributed(run())
+    }
     assert(eDist.getMessage.contains("uniform"))
   }
 

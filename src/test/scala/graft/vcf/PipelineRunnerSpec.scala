@@ -67,5 +67,13 @@ class PipelineRunnerSpec extends AnyFunSuite {
       PipelineRunner.parseArgs(Array(
         "--root", tables, "--gvcf", "a.vcf", "--gvcf", "b.vcf"))
     }
+    // --chrom takes the reference's chromosome names
+    assert(PipelineRunner.parseArgs(Array("--root", tables, "--chrom", "X")).chrom == 24)
+    assert(PipelineRunner.parseArgs(Array("--root", tables, "--chrom", "chr7")).chrom == 7)
+    // a misspelled stage fails by name instead of being skipped
+    val bad = intercept[IllegalArgumentException] {
+      PipelineRunner.main(Array("--root", tables, "--stages", "parse,grup"))
+    }
+    assert(bad.getMessage.contains("grup"), bad.getMessage)
   }
 }

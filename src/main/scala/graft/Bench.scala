@@ -18,14 +18,34 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def freshSession(cpus: String): SparkSession = {
-    val spark = GraftSession.tune(
-        SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-        shufflePartitions = cpus.toInt)
-      .getOrCreate()
+  private def freshSession(): SparkSession = {
+    val spark = GraftSession.harness("graft-bench",
+      shufflePartitions = GraftSession.harnessCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The query names a focused run keeps: with `only`, each name whose
+    * prefix (text before '_', "d2" of "d2_ngram_jaccard") or family
+    * (prefix before its first digit, "d") is listed; without, all of
+    * them. A listed entry that selects nothing is a typo, not an empty
+    * run: it fails here, naming every such entry, before any session
+    * starts.
+    */
+  def select(names: Iterable[String], only: Option[Set[String]]): Seq[String] =
+    only match {
+      case None => names.toSeq
+      case Some(ps) =>
+        def keys(name: String) = {
+          val p = name.takeWhile(_ != '_')
+          Set(p, p.takeWhile(!_.isDigit))
+        }
+        val unmatched = ps.filterNot(p => names.exists(keys(_)(p)))
+        require(ps.nonEmpty, "--only lists no query prefix")
+        require(unmatched.isEmpty,
+          s"--only: no query matches ${unmatched.toSeq.sorted.mkString(", ")}")
+        names.filter(n => keys(n).exists(ps)).toSeq
+    }
 
   // Untimed generic warmup: JIT, codegen paths (agg/join/window/generate)
   // and the parquet reader, so the first measured query of each shape
@@ -62,7 +82,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Optional focused run: `--only g1,g2` (or SPARK_GRAFT_BENCH_ONLY)
+    // keeps just the listed query prefixes or families (see `select`) —
+    // per-family measurement without a 300-query sweep.
+    val only: Option[Set[String]] = args.sliding(2).collectFirst {
+      case Array("--only", l) => l
+    }.orElse(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val selected = select(SparkEntry.queries.keys, only)
+      .map(name => name -> SparkEntry.queries(name))
     // d6/d16/d22 share a durable cross-run cluster cache (the r12 verdict's
     // sanctioned write-through). A surviving cache dir would make those
     // queries' run-1 timings measure a parquet READ of a previous run's
@@ -111,25 +139,11 @@ object Bench {
         }
       }
     } catch { case _: Throwable => ("failed", Map.empty[String, Double]) }
-    // Optional focused run: `--only g1,g2` (or SPARK_GRAFT_BENCH_ONLY)
-    // keeps just the queries whose name-prefix (text before '_') is
-    // listed — per-family measurement without a 200-query sweep.
-    val only: Option[Set[String]] = args.sliding(2).collectFirst {
-      case Array("--only", l) => l
-    }.orElse(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // matches either a query prefix ("d2") or a whole family ("d")
-    val selected = only match {
-      case None => SparkEntry.queries
-      case Some(ps) => SparkEntry.queries.filter { case (name, _) =>
-        val p = name.takeWhile(_ != '_')
-        ps.contains(p) || ps.contains(p.takeWhile(!_.isDigit)) }
-    }
-    val byFamily = selected.toSeq
+    val byFamily = selected
       .groupBy { case (k, _) => k.takeWhile(!_.isDigit) }
       .toSeq.sortBy(_._1)
     val results = byFamily.flatMap { case (_, qs) =>
-      val spark = freshSession(cpus)
+      val spark = freshSession()
       warmup(spark, sfDir)
       val famResults = qs.sortBy(_._1).map { case (name, fn) =>
         // A run that throws is a FAILURE, not a timing: recording its
@@ -244,14 +258,13 @@ object Bench {
     // the last 2000 chars, so round-over-round per-query diffs come from
     // this file, never from truncated stdout (the r4/r5 parsed-null
     // lesson). Written to the working directory next to the repo's
-    // BENCH_r{N}.json history.
-    // A focused `--only` run must NOT clobber the durable full-suite
-    // record — it lands in bench_focused.json instead.
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        if (only.isEmpty) "bench_full.json" else "bench_focused.json"),
-      (fullLine + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    // BENCH_r{N}.json history. A focused `--only` run writes no file:
+    // it must not clobber the full-suite record, and its line is the
+    // stderr `[bench-full]` one above.
+    if (only.isEmpty)
+      try java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
+        (fullLine + "\n").getBytes("UTF-8"))
+      catch { case _: Throwable => () }
     // The stdout line must survive the driver's last-2000-chars capture
     // (plus sbt's trailing "[success] Total time" line, ~75 chars). At
     // 190 queries even prefix-keyed per-query entries run ~2.3 KB

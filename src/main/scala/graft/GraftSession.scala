@@ -45,6 +45,18 @@ object GraftSession {
       (64L * 1024 * 1024).toString)
     .config("spark.ui.enabled", "false")
 
+  /** Cores of the local harness sessions (Bench, Verify and the tools):
+    * SPARK_GRAFT_CPUS, else every core of this host — one fixed default
+    * oversubscribes a small host and idles a large one.
+    */
+  def harnessCpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Tuned builder for a `local[harnessCpus]` harness session. */
+  def harness(appName: String, shufflePartitions: Int = 32): SparkSession.Builder =
+    tune(SparkSession.builder().master(s"local[$harnessCpus]").appName(appName),
+      shufflePartitions)
+
   /** Local session for tests / ad-hoc runs. */
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val s = tune(SparkSession.builder().master(s"local[$cores]").appName(appName))

@@ -718,8 +718,7 @@ object SparkEntry {
       col("c_custkey").cast("long").as("id"),
       substring(md5(col("c_custkey").cast("string")), 1, 12).as("nm"))
     // +1e8 offset: far above any real c_custkey at every supported sf,
-    // so planted ids can never collide with genuine records (the
-    // ScaleProbe headroom convention)
+    // so planted ids can never collide with genuine records
     val dirty = base.filter(col("id") % 10 === 0)
       .select((col("id") + 100000000L).as("id"),
         concat(col("nm"), lit("x")).as("nm"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,11 +8,8 @@ object Verify {
     // optional third arg: comma-separated query names — local iteration
     // only (the driver always runs the full set with two args)
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-        SparkSession.builder().master(s"local[$cpus]").appName("graft-verify"),
-        shufflePartitions = cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.harness("graft-verify",
+        shufflePartitions = GraftSession.harnessCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -25,7 +21,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // release the query's dropped localCheckpoint blocks (ContextCleaner
-      // frees them on GC) — the Bench/ScaleProbe discipline; without it the
+      // frees them on GC) — Bench's discipline; without it the
       // dedup family's checkpoints accumulate across the 112-query session
       System.gc()
     }

@@ -109,8 +109,7 @@ object DumpPlans {
     require(args.length <= 1 || args.length >= 4,
       "usage: DumpPlans [sfDir] | DumpPlans <sfDir> <round> <suffix> <query...>")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master("local[8]").appName("plans")).getOrCreate()
+    val spark = GraftSession.harness("plans").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (args.length >= 4) {
       val (round, suffix) = (args(1), args(2))

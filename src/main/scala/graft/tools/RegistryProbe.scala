@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{GraftSession, SparkEntry}
 import graft.operators.ModelRegistry
 
@@ -21,9 +19,7 @@ object RegistryProbe {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master("local[16]").appName("registry-probe"))
-      .getOrCreate()
+    val spark = GraftSession.harness("registry-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime(); body

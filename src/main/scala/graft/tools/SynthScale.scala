@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -58,9 +58,7 @@ object SynthScale {
     val out = args(1)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     require(factor >= 1, s"factor must be >= 1 (got $factor)")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master("local[16]").appName("synth-scale"))
-      .getOrCreate()
+    val spark = GraftSession.harness("synth-scale").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def t(n: String) = Tables(spark, src, n)
